@@ -135,9 +135,12 @@ object Mutations {
     */
   def removeDocuments(idx: InvertedIndex, ids: DataFrame): InvertedIndex = {
     val ts = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
+    // the live stats and a driver-held id set describe the OLD tombstone
+    // set: drop both, so stats are recounted and rows filtered through
+    // the grown frame
     idx.copy(
       tombstones = if (idx.hasTombstones) idx.tombstones.union(ts) else ts,
-      hasTombstones = true)
+      hasTombstones = true, statsHint = None, tombstoneIds = None)
   }
 
   /** Reference `vacuum` (/root/reference/src/index.rs:193-241): physically

@@ -3,8 +3,9 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted index layout with checkpoint-resumable build stages, atomic
   * publish, and per-partition lineage (north_rule requirements). The
@@ -14,7 +15,8 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `root/`:
   * {{{
-  *   manifest.json      completed stages, row counts, per-bucket lineage
+  *   manifest.json      completed stages, row counts, per-bucket lineage,
+  *                      table schemas
   *   docstats/          parquet (doc_id, fl)
   *   postings/          parquet, hive-partitioned by bucket=pmod(xxhash64(term), B)
   *   termdict/          parquet (term, df, bucket)
@@ -104,6 +106,46 @@ object IndexCatalog {
     ()
   }
 
+  // ---- table schemas, recorded in the manifest ----
+
+  /** Manifest key of the schema of the table in `dir`: the table name, or
+    * `<table>.gen` for the append-generation dirs (`termdict.d3`,
+    * `fieldstats.g5`), which all share one schema.
+    */
+  private def schemaKey(dir: String): String =
+    if (dir.contains('.')) s"schema.${dir.takeWhile(_ != '.')}.gen" else s"schema.$dir"
+
+  /** DDL of the schema a parquet read resolves `df`, written with
+    * `partitionBy`, to: data columns, then partition columns, all nullable.
+    * Each write records it in the manifest write it already makes, so reads
+    * pin it instead of running a footer-inference job per
+    * `spark.read.parquet`.
+    */
+  private def schemaOf(df: DataFrame, partitionBy: Seq[String] = Nil): String = {
+    val s = df.schema
+    org.apache.spark.sql.graftbridge.asNullable(StructType(
+      s.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(s(_)))).toDDL
+  }
+
+  /** A parquet reader for the table in `dir` with its recorded schema. A
+    * root written before schemas were recorded has no key: the read infers
+    * the schema from the footers (one job).
+    */
+  private def reader(spark: SparkSession, m: Map[String, String], dir: String): DataFrameReader =
+    m.get(schemaKey(dir)).fold(spark.read)(spark.read.schema(_))
+
+  private def readTable(spark: SparkSession, root: String, m: Map[String, String],
+      dir: String): DataFrame =
+    reader(spark, m, dir).parquet(s"$root/$dir")
+
+  /** Tombstones are always `(doc_id: long)` — every remove casts — so their
+    * schema is a constant rather than a manifest key.
+    */
+  private val TombstoneSchema = "doc_id BIGINT"
+
+  private def isDataFile(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
   /** Promote a streaming ingester's staged batch marker into its committed
     * form, as part of a publish's single manifest write. Lineage-bound
     * markers (`<queryId>:<batchId>`, [[graft.streaming.StreamLineage]])
@@ -148,7 +190,8 @@ object IndexCatalog {
     // persisted table in a separate job
     val metricCols = count(lit(1)).as("rows") +:
       extraMetrics.map { case (n, c) => c.as(n) }
-    val w = df.observe(obs, metricCols.head, metricCols.tail: _*)
+    val frame = df
+    val w = frame.observe(obs, metricCols.head, metricCols.tail: _*)
       .write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
     val rows = obs.get("rows").asInstanceOf[Long]
@@ -160,10 +203,20 @@ object IndexCatalog {
     val secs = (System.nanoTime() - t0) / 1e9
     val m2 = manifest +
       (s"stage.$name.rows" -> rows.toString) +
-      (s"stage.$name.secs" -> f"$secs%.3f")
+      (s"stage.$name.secs" -> f"$secs%.3f") +
+      (schemaKey(name) -> schemaOf(frame, partitionBy))
     writeManifest(spark, root, m2)
     m2
   }
+
+  /** Per-bucket lineage `b=n;…` in bucket order: Σ `rows` (one per row by
+    * default) per `bucket`, summed on the driver — one job, no shuffle.
+    */
+  private def bucketLineage(df: DataFrame, rows: org.apache.spark.sql.Column = lit(1L)): String =
+    DriverAgg.sumsByKey(df.select(col("bucket").cast("string").as("bucket"), rows.as("rows")),
+        "bucket", "rows")
+      .toSeq.map { case (b, n) => (b.toInt, n) }.sorted
+      .map { case (b, n) => s"$b=$n" }.mkString(";")
 
   /** Persisted, resumable index build. Safe to re-invoke after a crash:
     * completed stages are skipped and later stages read the persisted
@@ -216,7 +269,7 @@ object IndexCatalog {
       // lineage below folds from the VOCAB-sized dictionary instead of a
       // second full scan of the posting store; readers never see it
       // ([[termdictDf]] projects it away)
-      spark.read.parquet(s"$root/postings")
+      readTable(spark, root, m, "postings")
         .groupBy(col("term"), col("bucket"))
         .agg(sum(col("occ")).as("df"), count(lit(1)).as("rows"))
         .repartitionByRange(col("term"))
@@ -235,20 +288,17 @@ object IndexCatalog {
           // gone, fall back to the persisted-docstats aggregate
           val aggs = count(lit(1)).as("n") +:
             (0 until nf).map(i => coalesce(sum(element_at(col("fl"), i + 1)), lit(0L)).as(s"s$i"))
-          spark.read.parquet(s"$root/docstats").agg(aggs.head, aggs.tail: _*)
+          readTable(spark, root, m, "docstats").agg(aggs.head, aggs.tail: _*)
       }
     }
     // per-bucket lineage: posting row count per partition — folded from
     // the dictionary's `rows` column when present (vocab-sized scan); the
     // postings re-scan remains only for resumes over a pre-`rows` termdict
     if (!m.contains("lineage.postings")) {
-      val td = spark.read.parquet(s"$root/termdict")
-      val perBucket = (
-        if (td.columns.contains("rows"))
-          td.groupBy("bucket").agg(sum(col("rows")).as("count"))
-        else spark.read.parquet(s"$root/postings").groupBy("bucket").count()
-      ).orderBy("bucket").collect()
-        .map(r => s"${r.getInt(0)}=${r.getLong(1)}").mkString(";")
+      val td = readTable(spark, root, m, "termdict")
+      val perBucket =
+        if (td.columns.contains("rows")) bucketLineage(td, col("rows"))
+        else bucketLineage(readTable(spark, root, m, "postings"))
       m = m + ("lineage.postings" -> perBucket) +
         ("config.nBuckets" -> nBuckets.toString) +
         ("config.numFields" -> fieldCols.size.toString) +
@@ -268,62 +318,117 @@ object IndexCatalog {
   private def deltaGens(m: Map[String, String]): Seq[String] =
     m.getOrElse("append.deltas", "").split(",").filter(_.nonEmpty).toSeq
 
-  /** The live term dictionary: base generation unioned with any append
-    * deltas (df summed per term). With no deltas this is the plain base
-    * scan.
+  /** The stored dictionary: the base generation, then one table per append
+    * delta — each `(term, bucket, df)` with one row per term.
     */
-  private def termdictDf(spark: SparkSession, root: String,
-      m: Map[String, String]): DataFrame = {
+  private def dictParts(spark: SparkSession, root: String,
+      m: Map[String, String]): Seq[DataFrame] =
     // explicit projection: build-time bookkeeping columns (`rows`, used
     // once for lineage) must not leak into the reader schema, and the
-    // append-delta unionByName below needs both sides column-identical
-    val base = spark.read.parquet(s"$root/${tableDir(m, "termdict")}")
-      .select(col("term"), col("bucket"), col("df"))
-    val gs = deltaGens(m)
-    if (gs.isEmpty) base
-    else gs.map(g => spark.read.parquet(s"$root/termdict.d$g"))
-      .foldLeft(base)(_.unionByName(_))
+    // parts must be column-identical for the union below
+    (tableDir(m, "termdict") +: deltaGens(m).map(g => s"termdict.d$g"))
+      .map(d => readTable(spark, root, m, d).select(col("term"), col("bucket"), col("df")))
+
+  /** The live term dictionary: the parts' df summed per term. With no
+    * deltas this is the plain base scan.
+    */
+  private def termdictDf(spark: SparkSession, root: String,
+      m: Map[String, String]): DataFrame = sumDict(dictParts(spark, root, m))
+
+  private def sumDict(parts: Seq[DataFrame]): DataFrame =
+    if (parts.size == 1) parts.head
+    else parts.reduce(_.unionByName(_))
       .groupBy(col("term"), col("bucket")).agg(sum(col("df")).as("df"))
+
+  /** The stored global field-stats rows `(n, s0, …)`: the base generation,
+    * then one row per append delta (each over just its docs).
+    */
+  private def statsParts(spark: SparkSession, root: String,
+      m: Map[String, String], nf: Int): Seq[DataFrame] =
+    (tableDir(m, "fieldstats") +: deltaGens(m).map(g => s"fieldstats.d$g"))
+      .map(d => readTable(spark, root, m, d)
+        .select(col("n") +: (0 until nf).map(i => col(s"s$i")): _*))
+
+  /** Σ of `(n, s0, …)` rows as field stats: one job, summed on the driver. */
+  private def sumStats(rows: Seq[DataFrame]): FieldStats = {
+    val v = DriverAgg.sums(rows.reduce(_.union(_)))
+    val sums = v.tail
+    FieldStats(v(0), sums, sums.map(_.toDouble / v(0).toDouble))
   }
 
-  /** The live global field stats row: base generation plus append deltas
-    * (each delta is ONE row of (n, s0..)-sums over just its docs).
+  /** The STORED global field stats (base plus append deltas): every doc in
+    * docstats, tombstoned ones included.
     */
-  private def fieldstatsRow(spark: SparkSession, root: String,
-      m: Map[String, String], nf: Int): org.apache.spark.sql.Row = {
-    val base = spark.read.parquet(s"$root/${tableDir(m, "fieldstats")}")
-    val gs = deltaGens(m)
-    if (gs.isEmpty) base.head()
-    else {
-      val all = gs.map(g => spark.read.parquet(s"$root/fieldstats.d$g"))
-        .foldLeft(base)(_.unionByName(_))
-      val aggs = sum(col("n")).as("n") +:
-        (0 until nf).map(i => sum(col(s"s$i")).as(s"s$i"))
-      all.agg(aggs.head, aggs.tail: _*).head()
-    }
+  private[graft] def storedFieldStats(spark: SparkSession, root: String): FieldStats = {
+    val m = readManifest(spark, root)
+    sumStats(statsParts(spark, root, m, m("config.numFields").toInt))
+  }
+
+  /** Largest tombstone set held on the driver. Its ids become one hash-set
+    * predicate in every live plan, which ships with each task.
+    */
+  private val MaxHeldTombstones = 1 << 16
+
+  /** The root's tombstones: their frame, and the distinct ids when the set
+    * is held on the driver — its files no larger than Spark's broadcast
+    * threshold (the set Spark would ship to every executor anyway) and at
+    * most [[MaxHeldTombstones]] rows. None when no doc is tombstoned: no
+    * tombstone dir, or one whose files hold no id (a remove of an empty
+    * set), which must not send every query down the tombstone path.
+    */
+  private def openTombstones(spark: SparkSession, root: String,
+      hold: Boolean): Option[(DataFrame, Option[Array[Long]])] = {
+    val f = fs(spark, root)
+    val dir = new Path(s"$root/tombstones")
+    val files =
+      if (f.exists(dir)) f.listStatus(dir).filter(st => st.isFile && isDataFile(st.getPath.getName))
+      else Array.empty[org.apache.hadoop.fs.FileStatus]
+    if (files.isEmpty) return None
+    val df = spark.read.schema(TombstoneSchema).parquet(dir.toString)
+    if (!hold ||
+        files.map(_.getLen).sum > org.apache.spark.sql.graftbridge.broadcastThreshold(spark))
+      return Some((df, None))
+    // at most MaxHeldTombstones + 1 rows per partition reach the driver; a
+    // partition can only have been cut if more than MaxHeldTombstones rows
+    // came back, and then the set is not held anyway
+    val rows = DriverAgg.collectCapped(df.filter(col("doc_id").isNotNull), MaxHeldTombstones + 1)
+    if (rows.isEmpty) None
+    else if (rows.length > MaxHeldTombstones) Some((df, None))
+    else Some((df, Some(rows.map(_.getLong(0)).distinct.sorted)))
   }
 
   /** Open a persisted index. The postings DataFrame keeps its `bucket`
     * column so the query path can prune partitions.
+    *
+    * Jobs: one collecting a driver-held tombstone set, and one summing the
+    * stored field stats with the tombstoned docs' docstats rows SUBTRACTED
+    * — the snapshot's live stats, so queries run no stats job. A tombstone
+    * set too large to hold leaves the live stats to
+    * [[InvertedIndex.fieldStats]]' recount — and so does a
+    * vacuum caught between its table rewrites and its commit, when the
+    * stored dictionary and stats no longer describe the posting store.
     */
   def read(spark: SparkSession, root: String): InvertedIndex = {
     val m = readManifest(spark, root)
     require(m.getOrElse("published", "") == "true", s"no published index at $root")
     val nf = m("config.numFields").toInt
-    val f = fs(spark, root)
-    val hasTombs = f.exists(new Path(s"$root/tombstones"))
-    val tombstones =
-      if (hasTombs) spark.read.parquet(s"$root/tombstones")
-      else InvertedIndex.emptyTombstones(spark)
-    val statsRow = fieldstatsRow(spark, root, m, nf)
-    val n = statsRow.getLong(0)
-    val sums = (0 until nf).map(i => statsRow.getLong(i + 1)).toArray
-    InvertedIndex(
-      postings = spark.read.parquet(s"$root/postings"),
-      docstats = spark.read.parquet(s"$root/docstats"),
-      termdict = termdictDf(spark, root, m),
-      tombstones = tombstones, numFields = nf, hasTombstones = hasTombs,
-      statsHint = Some(FieldStats(n, sums, sums.map(_.toDouble / n.toDouble))))
+    val tombs = openTombstones(spark, root,
+      hold = m.getOrElse("vacuum.pending", "") != "true")
+    val parts = dictParts(spark, root, m)
+    val idx = InvertedIndex(
+      postings = readTable(spark, root, m, "postings"),
+      docstats = readTable(spark, root, m, "docstats"),
+      termdict = sumDict(parts),
+      tombstones = tombs.fold(InvertedIndex.emptyTombstones(spark))(_._1),
+      numFields = nf, hasTombstones = tombs.isDefined,
+      tombstoneIds = tombs.flatMap(_._2), dictParts = parts)
+    if (idx.hasTombstones && idx.tombstoneIds.isEmpty) idx
+    else {
+      val gone = if (!idx.hasTombstones) Nil else Seq(idx.docstats.filter(idx.tombstoned)
+        .select(lit(-1L).as("n") +: (0 until nf).map(i =>
+          -coalesce(element_at(col("fl"), i + 1).cast("long"), lit(0L))): _*))
+      idx.copy(statsHint = Some(sumStats(statsParts(spark, root, m, nf) ++ gone)))
+    }
   }
 
   /** Block-table format version; bumped when the [[PostingBlocks.Block]]
@@ -402,7 +507,7 @@ object IndexCatalog {
     val nf = m("config.numFields").toInt
     val nb = m("config.nBuckets").toInt
     m = stage(spark, root, "blocks", m, partitionBy = Seq("bucket", "rg")) {
-      PostingBlocks.fromPostings(spark.read.parquet(s"$root/postings"), nf, blockSize)
+      PostingBlocks.fromPostings(readTable(spark, root, m, "postings"), nf, blockSize)
         .toDF().withColumn("bucket", bucketOf(col("term"), nb))
         .withColumn("rg", rgCol(col("block_id"), rangesPerGroup))
         .repartition(nb, col("bucket"))
@@ -419,7 +524,8 @@ object IndexCatalog {
     */
   private val BlockStateKeys = Seq("stage.blocks.rows", "stage.blocks.secs",
     "blocks.pending", "blocks.swap", "blocks.swap.rows", "blocks.swap.drop",
-    "config.blockFormat", "config.blockSize", "config.rangesPerGroup")
+    "config.blockFormat", "config.blockSize", "config.rangesPerGroup",
+    "schema.blocks")
 
   /** Drop the block table and all its manifest state. The next
     * [[buildBlocks]] performs a FULL build with whatever
@@ -526,7 +632,7 @@ object IndexCatalog {
         }
         // basePath keeps the hive `bucket` partition column on the
         // explicit file list
-        val delta = spark.read.option("basePath", s"$root/postings")
+        val delta = reader(spark, m, "postings").option("basePath", s"$root/postings")
           .parquet(deltaFiles: _*)
           .withColumn("block_id", longDiv(col("doc_id"), bs))
           .withColumn("rg", rgCol(col("block_id"), rpg))
@@ -537,7 +643,7 @@ object IndexCatalog {
         val pairKeys = pairs.map { case (b, r) => s"$b:$r" }.toSeq
         // bucket/rg IN (…) partition-prunes the scan; the exact pair
         // filter keeps cartesian-extra partitions out of the rewrite
-        val old = spark.read.parquet(s"$root/blocks")
+        val old = readTable(spark, root, m, "blocks")
           .filter(col("bucket").isin(bks: _*) && col("rg").isin(rgs: _*) &&
             concat_ws(":", col("bucket"), col("rg")).isin(pairKeys: _*))
           .cache()
@@ -561,7 +667,8 @@ object IndexCatalog {
         val total = m("stage.blocks.rows").toLong - oldCnt + newCnt
         m = readManifest(spark, root) +
           ("blocks.swap" -> gens.mkString(",")) +
-          ("blocks.swap.rows" -> total.toString)
+          ("blocks.swap.rows" -> total.toString) +
+          (schemaKey("blocks") -> schemaOf(fresh, Seq("bucket", "rg")))
         writeManifest(spark, root, m)
       }
       // swap phase + final commit: trim exactly the folded generations
@@ -613,7 +720,7 @@ object IndexCatalog {
     // extra fields): BlockMaxTopK prunes the metadata scan to the expanded
     // terms' buckets and the probe/survivor decodes to their rg dirs —
     // without them every WAND query reads the whole block store
-    (spark.read.parquet(s"$root/blocks").as[PostingBlocks.Block], bs, rpg)
+    (readTable(spark, root, m, "blocks").as[PostingBlocks.Block], bs, rpg)
   }
 
   /** Incrementally compact the block table for a vacuum: re-encode only
@@ -629,29 +736,32 @@ object IndexCatalog {
     * rename with the swap marker still set).
     */
   private def compactBlocks(spark: SparkSession, root: String,
-      crashMidSwap: Boolean = false): Boolean = {
+      idx: InvertedIndex, crashMidSwap: Boolean = false): Boolean = {
     val f = fs(spark, root)
     val tmp = s"$root/$BlockFoldTmp"
     var m = readManifest(spark, root)
-    if (!f.exists(new Path(s"$root/tombstones")) && !m.contains("blocks.swap"))
+    if (!idx.hasTombstones && !m.contains("blocks.swap"))
       return true
     if (!m.contains("blocks.swap")) {
       val nf = m("config.numFields").toInt
       val nb = m("config.nBuckets").toInt
       val bs = m("config.blockSize").toLong
       val rpg = m("config.rangesPerGroup").toLong
-      val tombs = spark.read.parquet(s"$root/tombstones").select(col("doc_id"))
-      val rgs = tombs.select(rgCol(longDiv(col("doc_id"), bs), rpg)
-        .as("rg")).distinct().collect().map(_.getInt(0)).toSeq
+      // the rg of each tombstoned id: on the driver when the ids are held
+      // there (the same exact long division as rgCol)
+      val rgs = idx.tombstoneIds match {
+        case Some(ids) => ids.map(id => Math.toIntExact(id / bs / rpg)).distinct.toSeq
+        case None => idx.tombstones.select(rgCol(longDiv(col("doc_id"), bs), rpg)
+          .as("rg")).distinct().collect().map(_.getInt(0)).toSeq
+      }
       if (rgs.isEmpty) return true
-      val old = spark.read.parquet(s"$root/blocks")
+      val old = readTable(spark, root, m, "blocks")
         .filter(col("rg").isin(rgs: _*)).cache()
       val oldPairs = old.select(col("bucket"), col("rg")).distinct().collect()
         .map(r => s"bucket=${r.getInt(0)}/rg=${r.getInt(1)}")
       if (oldPairs.isEmpty) { old.unpersist(); return true }
       val oldCnt = old.count()
-      val live = PostingBlocks.toPostings(old, nf, bs)
-        .join(tombs, Seq("doc_id"), "left_anti")
+      val live = idx.withoutTombstoned(PostingBlocks.toPostings(old, nf, bs))
       val fresh = PostingBlocks.fromPostings(live, nf, bs)
         .toDF().withColumn("bucket", bucketOf(col("term"), nb))
         .withColumn("rg", rgCol(col("block_id"), rpg))
@@ -679,6 +789,7 @@ object IndexCatalog {
       } yield s"${b.getPath.getName}/${r.getPath.getName}").toSet
       m = readManifest(spark, root) + ("blocks.swap" -> "vacuum") +
         ("blocks.swap.rows" -> total.toString) +
+        (schemaKey("blocks") -> schemaOf(fresh, Seq("bucket", "rg"))) +
         ("blocks.swap.drop" -> oldPairs.filterNot(freshPairs).mkString(";"))
       writeManifest(spark, root, m)
     }
@@ -790,51 +901,53 @@ object IndexCatalog {
     f.delete(new Path(stageDir), true)
 
     val delta = IndexBuilder.build(docs, docIdCol, fieldCols)
-    delta.docstats.write.parquet(s"$stageDir/docstats")
-    delta.postings.withColumn("bucket", bucketOf(col("term"), nb))
+    val deltaPostings = delta.postings.withColumn("bucket", bucketOf(col("term"), nb))
       .repartition(nb, col("bucket"))
       .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.partitionBy("bucket").parquet(s"$stageDir/postings")
+    // the schemas of the staged tables, known before they are written: the
+    // reads below pin them, and the stage commit records them
+    val schemas = Map(schemaKey("docstats") -> schemaOf(delta.docstats),
+      schemaKey("postings") -> schemaOf(deltaPostings, Seq("bucket")))
+    def staged(table: String) =
+      spark.read.schema(schemas(schemaKey(table))).parquet(s"$stageDir/$table")
+    delta.docstats.write.parquet(s"$stageDir/docstats")
+    deltaPostings.write.partitionBy("bucket").parquet(s"$stageDir/postings")
     // dictionary/stats: a DELTA table covering only this generation's docs
     // (O(delta-vocab) — a streaming micro-batch's stage cost no longer
     // scales with the corpus vocabulary), rolled up into one merged base
     // every `compactDeltasEvery` generations so the reader-side union stays
-    // bounded. The reader is [[termdictDf]]/[[fieldstatsRow]].
+    // bounded. The reader is [[dictParts]]/[[statsParts]]; both kinds of
+    // generation dir share one schema.
     val kind = if (deltaGens(m).size + 1 >= compactDeltasEvery) "rollup" else "delta"
     val aggs = count(lit(1)).as("n") +:
       (0 until nf).map(i => coalesce(sum(element_at(col("fl"), i + 1)), lit(0L)).as(s"s$i"))
-    if (kind == "delta") {
-      spark.read.parquet(s"$stageDir/postings")
-        .groupBy(col("term")).agg(sum(col("occ")).as("df"))
-        .withColumn("bucket", bucketOf(col("term"), nb))
-        .write.parquet(s"$stageDir/termdict")
-      spark.read.parquet(s"$stageDir/docstats")
-        .agg(aggs.head, aggs.tail: _*)
-        .write.parquet(s"$stageDir/fieldstats")
-    } else {
-      termdictDf(spark, root, m)
-        .select(col("term"), col("df"))
-        .union(spark.read.parquet(s"$stageDir/postings")
-          .groupBy(col("term")).agg(sum(col("occ")).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
-        .withColumn("bucket", bucketOf(col("term"), nb))
-        .write.parquet(s"$stageDir/termdict")
-      // the live docstats dir already holds every prior generation's rows
-      // (publishAppend moves them in), so a full re-aggregate is exact
-      spark.read.parquet(s"$root/docstats")
-        .union(spark.read.parquet(s"$stageDir/docstats"))
-        .agg(aggs.head, aggs.tail: _*)
-        .write.parquet(s"$stageDir/fieldstats")
-    }
+    val (termdict, fieldstats) =
+      if (kind == "delta")
+        (staged("postings").groupBy(col("term")).agg(sum(col("occ")).as("df")),
+          staged("docstats").agg(aggs.head, aggs.tail: _*))
+      else
+        (termdictDf(spark, root, m)
+          .select(col("term"), col("df"))
+          .union(staged("postings")
+            .groupBy(col("term")).agg(sum(col("occ")).as("df")))
+          .groupBy(col("term")).agg(sum(col("df")).as("df")),
+          // the live docstats dir already holds every prior generation's
+          // rows (publishAppend moves them in), so a full re-aggregate is
+          // exact
+          readTable(spark, root, m, "docstats").union(staged("docstats"))
+            .agg(aggs.head, aggs.tail: _*))
+    val termdictOut = termdict.withColumn("bucket", bucketOf(col("term"), nb))
+    termdictOut.write.parquet(s"$stageDir/termdict")
+    fieldstats.write.parquet(s"$stageDir/fieldstats")
     // per-bucket lineage of the DELTA, recorded at stage time: appends must
     // not rescan the whole posting store per publish (at streaming-ingest
     // rates that is an O(corpus) metadata pass per micro-batch), so the
     // global `lineage.postings` stays as-of the last build/vacuum and each
     // append adds its own delta line.
-    val deltaPerBucket = spark.read.parquet(s"$stageDir/postings")
-      .groupBy("bucket").count().orderBy("bucket").collect()
-      .map(r => s"${r.getInt(0)}=${r.getLong(1)}").mkString(";")
-    writeManifest(spark, root, readManifest(spark, root) ++ extra +
+    val deltaPerBucket = bucketLineage(staged("postings"))
+    writeManifest(spark, root, readManifest(spark, root) ++ extra ++ schemas +
+      (schemaKey(s"termdict.g$g") -> schemaOf(termdictOut)) +
+      (schemaKey(s"fieldstats.g$g") -> schemaOf(fieldstats)) +
       ("append.staged" -> g.toString) +
       ("append.staged.kind" -> kind) +
       (s"lineage.append.$g" -> deltaPerBucket))
@@ -1068,12 +1181,9 @@ object IndexCatalog {
     // stats rows — additive by construction
     mo = stage(spark, out, "fieldstats", mo) {
       val nfi = nf.toInt
-      val rows = shards.zip(ms).map { case (r, m) =>
-        fieldstatsRow(spark, r, m, nfi)
-      }
-      val n = rows.map(_.getLong(0)).sum
-      val cols = lit(n).as("n") +: (0 until nfi).map(i =>
-        lit(rows.map(_.getLong(i + 1)).sum).as(s"s$i"))
+      val stats = shards.map(storedFieldStats(spark, _))
+      val cols = lit(stats.map(_.n).sum).as("n") +: (0 until nfi).map(i =>
+        lit(stats.map(_.sums(i)).sum).as(s"s$i"))
       spark.range(1).select(cols: _*)
     }
 
@@ -1093,7 +1203,13 @@ object IndexCatalog {
           .map { kv => val Array(b, c) = kv.split("="); (b.toInt, c.toLong) })
         .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
         .map { case (b, c) => s"$b=$c" }.mkString(";")
-      mo = mo + ("lineage.postings" -> perBucket) +
+      // the copied tables keep the shards' schemas when all of them agree
+      val copiedSchemas = Seq("postings", "docstats").map(schemaKey)
+        .flatMap(k => ms.map(_.get(k)).distinct match {
+          case Seq(Some(ddl)) => Some(k -> ddl)
+          case _ => None
+        })
+      mo = mo ++ copiedSchemas + ("lineage.postings" -> perBucket) +
         ("config.nBuckets" -> nBuckets) +
         ("config.numFields" -> nf) +
         ("config.fields" -> fields) +
@@ -1125,11 +1241,14 @@ object IndexCatalog {
       .write.mode("append").parquet(s"$root/tombstones")
   }
 
-  /** Driver-side convenience overload (small ad-hoc removals). */
-  def removeDocuments(spark: SparkSession, root: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    removeDocuments(root, ids.toDF("doc_id"))
-  }
+  /** Driver-side convenience overload (small ad-hoc removals). Removing no
+    * id writes nothing.
+    */
+  def removeDocuments(spark: SparkSession, root: String, ids: Seq[Long]): Unit =
+    if (ids.nonEmpty) {
+      import spark.implicits._
+      removeDocuments(root, ids.toDF("doc_id"))
+    }
 
   // ---- fuzzy expansion at scale: the deletion-variant table ----
 
@@ -1183,14 +1302,14 @@ object IndexCatalog {
       // stale (base dictionary rolled up / vacuumed): strip keys and
       // rebuild — key-strip commits first so a crash never leaves a
       // phantom stage over a half-rebuilt dir
-      writeManifest(spark, root,
-        m -- Seq("stage.fuzzydict.rows", "stage.fuzzydict.secs", "fuzzy.base"))
+      writeManifest(spark, root, m -- Seq("stage.fuzzydict.rows",
+        "stage.fuzzydict.secs", "fuzzy.base", schemaKey("fuzzydict")))
       fs(spark, root).delete(new Path(s"$root/fuzzydict"), true)
       m = readManifest(spark, root)
     }
     val nb = m("config.nBuckets").toInt
     m = stage(spark, root, "fuzzydict", m, partitionBy = Seq("vbucket")) {
-      spark.read.parquet(s"$root/$base")
+      readTable(spark, root, m, base)
         .select(col("term")).distinct()
         .select(col("term"), explode(deletionVariantsCol(col("term"))).as("variant"))
         .withColumn("vbucket", bucketOf(col("variant"), nb))
@@ -1232,7 +1351,7 @@ object IndexCatalog {
     val vbs = qvars.toDF("variant")
       .select(bucketOf(col("variant"), nb).as("vb"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val probed = spark.read.parquet(s"$root/fuzzydict")
+    val probed = readTable(spark, root, m, "fuzzydict")
       .filter(col("vbucket").isin(vbs: _*) && col("variant").isin(qvars: _*))
       .select(col("term")).distinct()
       .limit(cap + 1).collect().map(_.getString(0))
@@ -1246,7 +1365,7 @@ object IndexCatalog {
     val gs = deltaGens(m)
     val deltaTerms =
       if (gs.isEmpty) Array.empty[String]
-      else gs.map(g => spark.read.parquet(s"$root/termdict.d$g"))
+      else gs.map(g => readTable(spark, root, m, s"termdict.d$g"))
         .reduce(_.unionByName(_))
         .filter(lenWindow).select(col("term")).distinct()
         .limit(cap + 1).collect().map(_.getString(0))
@@ -1304,6 +1423,24 @@ object IndexCatalog {
         else "")
       else mPre.get("vacuum.tombfiles")
     val idx = read(spark, root)
+    // retire EXACTLY the snapshot's tombstone files: ones appended during
+    // the vacuum stay live (their docs either got compacted away — the
+    // mask is then a no-op — or didn't, and the mask still hides them;
+    // correct either way). A legacy pending manifest without the snapshot
+    // key keeps the old whole-dir delete.
+    def retireTombstones(snapshot: Option[String]): Unit = snapshot match {
+      case Some(snap) =>
+        snap.split(";").filter(_.nonEmpty)
+          .foreach(n => f.delete(new Path(s"$root/tombstones/$n"), false))
+        val dataLeft = f.exists(tombDir) && f.listStatus(tombDir)
+          .exists(st => st.isFile && isDataFile(st.getPath.getName))
+        if (!dataLeft) f.delete(tombDir, true)
+      case None => f.delete(tombDir, true) // legacy pending manifest
+    }
+    if (!pending && !idx.hasTombstones) {
+      // tombstone files that hold no id: nothing to compact
+      retireTombstones(tombSnapshot); return
+    }
     var m = mPre
     // Block-table strategy: a CURRENT-format table with no unfolded append
     // deltas is compacted INCREMENTALLY after the stage rewrites — only
@@ -1344,7 +1481,7 @@ object IndexCatalog {
         .sortWithinPartitions(col("term"), col("doc_id"))
     }
     m = stage(spark, root, "termdict", m) {
-      spark.read.parquet(s"$root/postings")
+      readTable(spark, root, m, "postings")
         .groupBy(col("term"), col("bucket")).agg(sum(col("occ")).as("df"))
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"))
@@ -1353,7 +1490,7 @@ object IndexCatalog {
       val nf = idx.numFields
       val aggs = count(lit(1)).as("n") +:
         (0 until nf).map(i => coalesce(sum(element_at(col("fl"), i + 1)), lit(0L)).as(s"s$i"))
-      spark.read.parquet(s"$root/docstats").agg(aggs.head, aggs.tail: _*)
+      readTable(spark, root, m, "docstats").agg(aggs.head, aggs.tail: _*)
     }
     if (crashBeforeCommit) return // fault injection: die before the commit
     // incremental block compaction (decided above): re-encode only the rg
@@ -1362,14 +1499,12 @@ object IndexCatalog {
     if (blocksIncremental) {
       // false ONLY under crashMidBlockSwap fault injection: abort the
       // whole vacuum as a simulated crash one rename into the swap loop
-      if (!compactBlocks(spark, root, crashMidBlockSwap)) return
+      if (!compactBlocks(spark, root, idx, crashMidBlockSwap)) return
       m = readManifest(spark, root) // picks up the updated stage.blocks.rows
     }
     // vacuum rewrote the whole posting store: refresh the global lineage
     // (append deltas were folded in by the rewrite, so their lines go)
-    val perBucket = spark.read.parquet(s"$root/postings")
-      .groupBy("bucket").count().orderBy("bucket").collect()
-      .map(r => s"${r.getInt(0)}=${r.getLong(1)}").mkString(";")
+    val perBucket = bucketLineage(readTable(spark, root, m, "postings"))
     // FINAL COMMIT (one manifest write): repoint the small tables at the
     // rewritten plain dirs (drop the table.* generation keys and the
     // append-delta registry — the rewritten dictionary subsumes them),
@@ -1383,21 +1518,7 @@ object IndexCatalog {
         k.startsWith("lineage.append.") || k.startsWith("table."))) -
         "vacuum.pending" - "vacuum.tombfiles" - "append.deltas" +
         ("published" -> "true") + ("lineage.postings" -> perBucket))
-    // retire EXACTLY the snapshot's tombstone files: ones appended during
-    // the vacuum stay live (their docs either got compacted away — the
-    // mask is then a no-op — or didn't, and the mask still hides them;
-    // correct either way). A legacy pending manifest without the snapshot
-    // key keeps the old whole-dir delete.
-    m.get("vacuum.tombfiles") match {
-      case Some(snap) =>
-        snap.split(";").filter(_.nonEmpty)
-          .foreach(n => f.delete(new Path(s"$root/tombstones/$n"), false))
-        val dataLeft = f.exists(tombDir) && f.listStatus(tombDir)
-          .exists(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-        if (!dataLeft) f.delete(tombDir, true)
-      case None => f.delete(tombDir, true) // legacy pending manifest
-    }
+    retireTombstones(m.get("vacuum.tombfiles"))
     // GC the superseded generation/delta dirs (post-commit; also re-swept
     // by the next append's publish if this crashes)
     f.listStatus(new Path(root)).foreach { st =>

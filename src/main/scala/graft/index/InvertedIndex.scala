@@ -43,30 +43,64 @@ final case class InvertedIndex(
     tombstones: DataFrame,
     numFields: Int,
     /** Cheap driver-side knowledge that no doc was ever removed; lets the
-      * query path skip the anti-join entirely (common case at scale).
+      * query path skip the tombstone filter entirely (common case at scale).
       */
     hasTombstones: Boolean,
-    /** Precomputed stats (persisted index): avoids the docstats scan per
-      * query. Only trusted while no tombstones exist.
+    /** Precomputed LIVE stats (tombstoned docs already excluded): trusted
+      * whenever defined, so [[fieldStats]] runs no job. The persisted
+      * catalog sets it when the tombstone set is held on the driver (its
+      * stored stats minus the tombstoned docs' docstats rows); a handle
+      * that gains tombstones later (`Mutations.removeDocuments`) drops it.
       */
-    statsHint: Option[FieldStats] = None
+    statsHint: Option[FieldStats] = None,
+    /** The distinct tombstoned doc ids, when the set is small enough to
+      * hold on the driver (see [[graft.index.IndexCatalog.read]]): live
+      * views then filter `NOT doc_id IN (…)` inside the scan instead of
+      * running a broadcast anti-join per plan. None: filter through the
+      * `tombstones` frame.
+      */
+    tombstoneIds: Option[Array[Long]] = None,
+    /** The dictionary as stored — a base table plus one table per append
+      * generation, each `(term, bucket, df)` with one row per term — whose
+      * per-term df sum IS `termdict`. Lets expansion resolution collect the
+      * matching rows of every part in one job and sum them on the driver
+      * instead of shuffling a union. Empty: `termdict` is the only part.
+      */
+    dictParts: Seq[DataFrame] = Nil
 ) {
 
   /** Live docstats (tombstoned docs excluded). */
-  def liveDocstats: DataFrame =
-    if (hasTombstones) docstats.join(tombstones, Seq("doc_id"), "left_anti")
-    else docstats
+  def liveDocstats: DataFrame = withoutTombstoned(docstats)
 
   /** Live postings (tombstoned docs excluded). */
-  def livePostings: DataFrame =
-    if (hasTombstones) postings.join(tombstones, Seq("doc_id"), "left_anti")
-    else postings
+  def livePostings: DataFrame = withoutTombstoned(postings)
 
-  /** Compute global stats over live docs. Reference semantics: N counts ALL
+  /** Rows of `df` (a `doc_id` column) whose doc is not tombstoned. */
+  private[graft] def withoutTombstoned(df: DataFrame): DataFrame =
+    if (!hasTombstones) df
+    else if (tombstoneIds.isDefined) df.filter(!tombstoned)
+    else df.join(tombstones, Seq("doc_id"), "left_anti")
+
+  /** `doc_id IN (driver-held tombstone ids)`, as one hash-set predicate
+    * (never a list of literals). Only defined with [[tombstoneIds]].
+    */
+  private[graft] def tombstoned: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+    toColumn(InSet(toExpression(col("doc_id")), tombstoneSet))
+  }
+
+  @transient private lazy val tombstoneSet: Set[Any] =
+    tombstoneIds.getOrElse(
+      throw new IllegalStateException("tombstone ids are not held on the driver"))
+      .iterator.map(id => id: Any).toSet
+
+  /** Global stats over live docs. Reference semantics: N counts ALL
     * live docs (even those with an empty field), per-field sum counts
     * non-empty tokens, avg = sum / N (/root/reference/src/index.rs:112-113).
-    * One tiny aggregate job; result is broadcast into score expressions as
-    * literals. MEMOIZED per handle: the handle is immutable (a mutation
+    * The [[statsHint]] when defined (no job); otherwise one tiny aggregate
+    * job over the live docstats. The result is folded into score
+    * expressions as literals. MEMOIZED per handle: the handle is immutable (a mutation
     * produces a NEW InvertedIndex), so the live stats are a constant of the
     * instance — without the memo every query path that needs stats
     * (scoreCandidates, the WAND prepare, explain) re-runs the same 1-row
@@ -76,8 +110,7 @@ final case class InvertedIndex(
   def fieldStats(): FieldStats = computedStats
 
   @transient private lazy val computedStats: FieldStats = {
-    if (!hasTombstones && statsHint.isDefined) statsHint.get
-    else {
+    statsHint.getOrElse {
       val aggs = count(lit(1)).as("n") +:
         (0 until numFields).map(i =>
           coalesce(sum(element_at(col("fl"), i + 1)), lit(0L)).as(s"s$i"))
@@ -105,7 +138,8 @@ final case class InvertedIndex(
   def cached(): InvertedIndex =
     copy(postings = postings.localCheckpoint(), docstats = docstats.localCheckpoint(),
       termdict = termdict.localCheckpoint(),
-      tombstones = if (hasTombstones) tombstones.localCheckpoint() else tombstones)
+      tombstones = if (hasTombstones) tombstones.localCheckpoint() else tombstones,
+      dictParts = Nil) // resolve against the checkpointed dictionary
 
   def unpersist(): Unit = {
     // release BOTH storage shapes: CacheManager entries (plain persist)

@@ -52,20 +52,20 @@ import graft.score.ScoreModel
   * engine which fell back to exhaustive between a delete and the next
   * vacuum. The bound stays sound because each ingredient moves the safe
   * way:
-  *  - per-expansion df is RECOUNTED over live postings (the same recount
-  *    the exhaustive path does, QueryEngine.query) — the UB and the exact
-  *    scoring then use the same live idf;
-  *  - field stats come from [[InvertedIndex.fieldStats]], which recomputes
-  *    over live docs when tombstones exist;
+  *  - per-expansion df is the LIVE df (the same resolution the exhaustive
+  *    path uses, [[QueryEngine.liveDfs]]) — the UB and the exact scoring
+  *    then use the same live idf;
+  *  - field stats are the live ones ([[InvertedIndex.fieldStats]]);
   *  - block metadata (max_tf, min_fl, cnt) covers a SUPERSET of the live
   *    entries, and the tf-norm is increasing in tf and decreasing in fl,
   *    so the stored pair still dominates every live entry (cnt may
   *    overcount coverage under tombstones — θ then stays -inf and the
   *    exhaustive bail covers it; never unsound);
-  *  - probe and final candidates are anti-joined against the tombstone set
-  *    before scoring (the reference skips removed pointers inside the
-  *    query walk, /root/reference/src/query.rs:65), so θ is a true live
-  *    score and no deleted doc can surface.
+  *  - probe and final candidates — decoded blocks, which hold tombstoned
+  *    entries until a vacuum — drop tombstoned docs before scoring (the
+  *    reference skips removed pointers inside the query walk,
+  *    reference src/query.rs:65), so θ is a true live score and no
+  *    deleted doc can surface.
   * Parity under tombstones is fuzz-pinned by WandParityProps.
   *
   * Falls back to the exhaustive path when the expansion set exceeds the
@@ -140,10 +140,10 @@ object BlockMaxTopK {
     if (qterms.isEmpty) return None
 
     // resolve expansions against the dictionary; need them collected to
-    // broadcast per-term UB factors into the block metadata scan. SHARED
+    // carry per-term UB factors into the block metadata scan. SHARED
     // with the exhaustive collected path (QueryEngine.resolveExpansionsCollected
-    // / resolveFuzzyCollected — same collect cap, same tombstone live-df
-    // recount, same df>0 drop) so the two plans cannot drift in
+    // / resolveFuzzyCollected — same collect cap, same tombstone live df
+    // (QueryEngine.liveDfs), same df>0 drop) so the two plans cannot drift in
     // expansion/df semantics. Fuzzy expansions (maxEdits > 0) carry their
     // `edist` column into expDf; the models' expansionColumns then compute
     // the edit-distance boost, and the block bound (idf·eboost — or
@@ -167,7 +167,7 @@ object BlockMaxTopK {
               rows.map(r => r._3), buckets)
         }
 
-    val stats = idx.fieldStats() // live-recomputed under tombstones
+    val stats = idx.fieldStats() // live stats
     // per-model precalc + block bound via the SAME column expressions as
     // the scorer (bit-equal); a model without a sound metadata bound
     // answers None → exhaustive path (scorer-generic, like the reference
@@ -189,10 +189,9 @@ object BlockMaxTopK {
     // ---- block metadata → per-range upper bounds + coverage floors ----
     // (max_tf/min_fl cover a superset of live entries — still an upper
     // bound under tombstones, see scaladoc)
-    val meta = blocks.toDF().filter(blockPred)
+    val meta = QueryEngine.joinExpansions(blocks.toDF().filter(blockPred)
       .select(col("term"), col("block_id"), col("max_tf"), col("min_fl"),
-        col("cnt"))
-      .join(broadcast(expWithCols), col("term") === col("exp_term"))
+        col("cnt")), expWithCols)
       .select(col("block_id"), col("qti"), ubCol.as("ub"), col("cnt"))
     val rangeUb = meta
       .groupBy(col("block_id"), col("qti"))
@@ -231,13 +230,6 @@ object BlockMaxTopK {
       col("rg").isin(ids.map(i => (i / rangesPerGroup).toInt).distinct: _*)
     else lit(true)
 
-  /** Decoded block postings restricted to live docs (blocks still hold
-    * tombstoned entries until vacuum).
-    */
-  private def liveCand(idx: InvertedIndex, cand: DataFrame): DataFrame =
-    if (idx.hasTombstones) cand.join(idx.tombstones, Seq("doc_id"), "left_anti")
-    else cand
-
   /** Phase 1: exact-score the probe ranges; the k-th best TRUE score found
     * is the pruning threshold θ.
     */
@@ -245,7 +237,7 @@ object BlockMaxTopK {
       blocks: Dataset[PostingBlocks.Block], p: WandPrep, model: ScoreModel,
       fb: Seq[Double], k: Int, blockSize: Long, probeIds: Seq[Long],
       rangesPerGroup: Long, docFilter: Option[DataFrame] = None): Double = {
-    val probeCand = liveCand(idx, PostingBlocks.toPostings(
+    val probeCand = idx.withoutTombstoned(PostingBlocks.toPostings(
       blocks.toDF().filter(p.blockPred &&
         rgPredicate(blocks, probeIds, rangesPerGroup) &&
         col("block_id").isin(probeIds: _*)),
@@ -323,7 +315,7 @@ object BlockMaxTopK {
             val survBlocks = blocks.toDF().filter(p.blockPred &&
               rgPredicate(blocks, surv, rangesPerGroup) &&
               col("block_id").isin(surv: _*))
-            val cand = liveCand(idx,
+            val cand = idx.withoutTombstoned(
               PostingBlocks.toPostings(survBlocks, idx.numFields, blockSize))
             QueryEngine.scoreCandidates(idx, cand, p.expDf, model, fb,
               p.raw.length, k, docFilterP)
@@ -336,7 +328,7 @@ object BlockMaxTopK {
           // AQE pick broadcast vs shuffle from the actual size
           val survBlocks = blocks.toDF().filter(p.blockPred)
             .join(survivors, Seq("block_id"), "left_semi")
-          val cand = liveCand(idx,
+          val cand = idx.withoutTombstoned(
             PostingBlocks.toPostings(survBlocks, idx.numFields, blockSize))
           QueryEngine.scoreCandidates(idx, cand, p.expDf, model, fb,
             p.raw.length, k, docFilterP)

@@ -1,11 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.analysis.Analyzer
-import graft.index.InvertedIndex
+import graft.index.{DriverAgg, InvertedIndex}
 import graft.score.ScoreModel
 
 /** Free-text disjunctive query over an [[InvertedIndex]] — the Spark-native
@@ -14,12 +14,13 @@ import graft.score.ScoreModel
   *
   * {{{
   *   query string ── tokenize (driver, trivial)
-  *   term_dict  ⋈_startsWith broadcast(query terms)   → expansions
+  *   term_dict  ── filter(startsWith any query term), collected
   *              (reference expand_term, query.rs:108-147: trie prefix DFS
-  *               ≡ prefix predicate on the term dictionary)
+  *               ≡ prefix predicate on the term dictionary; the
+  *               (query term, expansion) pairing runs on the driver)
   *   postings   ── filter(term/bucket IN expansions, or prefix-OR)
-  *              ── anti ⋈ tombstones                  (skipped when none)
-  *              ⋈ broadcast(expansions + per-term precalc columns)
+  *              ── NOT doc_id IN tombstones           (skipped when none)
+  *              ⋈ expansions + per-term precalc columns
   *              ── ScoreModel.score                   (one shuffle on doc_id)
   *              ── orderBy(score desc, doc_id asc)    (top-k ⇒
   *                                                     TakeOrderedAndProject)
@@ -35,9 +36,12 @@ import graft.score.ScoreModel
   * prefixes fall back to a non-collected plan with a `startsWith` scan
   * predicate, preserving the reference's unbounded-expansion semantics.
   *
-  * The query side is always tiny, so every join against postings is a
-  * broadcast hash join — the only exchange over big data is the final
-  * per-doc aggregation.
+  * What the driver already holds is not shipped back through Spark jobs:
+  * a collected expansion table joins the postings as a literal hash table
+  * inside the scan ([[joinExpansions]]), and a tombstone set held on the
+  * driver is a hash-set predicate, not an anti-join. Only a non-collected
+  * expansion table or a tombstone set too large to hold is a broadcast
+  * join. The exchanges over posting data are the scoring aggregations.
   */
 object QueryEngine {
 
@@ -185,8 +189,7 @@ object QueryEngine {
               Seq("doc_id"), "left_semi")
           else cand1
         val stats = idx.fieldStats()
-        val joined = cand2.join(broadcast(model.expansionColumns(exp, stats)),
-          col("term") === col("exp_term"))
+        val joined = joinExpansions(cand2, model.expansionColumns(exp, stats))
         model.termContributions(joined, stats, fb, idx.numFields)
           .orderBy(col("doc_id").asc, col("qti").asc)
     }
@@ -562,8 +565,7 @@ object QueryEngine {
         val expDf = expRows.toDF("qid", "qti", "qterm", "exp_term", "df", "qlen")
         val cand = idx.livePostings.filter(
           candidatePredicate(idx, rows.map(_._3).distinct, buckets))
-        val joined = cand.join(broadcast(model.expansionColumns(expDf, stats)),
-          col("term") === col("exp_term"))
+        val joined = joinExpansions(cand, model.expansionColumns(expDf, stats))
         model.scoreBatch(joined, stats, fb, idx.numFields)
       case None =>
         // non-collected fallback (giant batch / hot prefixes): the same
@@ -708,7 +710,7 @@ object QueryEngine {
         .map(r => (0, r.getString(0), r.getString(0), r.getLong(1)))
       val buckets = collected.map(_.getInt(2)).distinct.toSeq
       if (idx.hasTombstones && rows.nonEmpty) {
-        val liveDf = recountLiveDf(idx, rows.map(_._3).distinct, buckets)
+        val liveDf = liveDfs(idx, rows.map(r => r._3 -> r._4).toMap, buckets)
         rows = rows.flatMap { case (qti, qterm, eterm, _) =>
           liveDf.get(eterm).map(d => (qti, qterm, eterm, d))
         }
@@ -1327,11 +1329,7 @@ object QueryEngine {
         r.getInt(5)))
     val buckets = collected.map(_.getInt(4)).distinct.toSeq
     if (idx.hasTombstones && rows.nonEmpty) {
-      val eterms = rows.map(_._3).distinct
-      val liveDf = idx.livePostings
-        .filter(candidatePredicate(idx, eterms, buckets))
-        .groupBy(col("term")).agg(sum(col("occ")).as("ldf"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val liveDf = liveDfs(idx, rows.map(r => r._3 -> r._4).toMap, buckets)
       rows = rows.flatMap { case (qti, qterm, eterm, _, ed) =>
         liveDf.get(eterm).map(d => (qti, qterm, eterm, d, ed))
       }
@@ -1360,50 +1358,124 @@ object QueryEngine {
     * Returns None when the expansion set exceeds `cap` (callers keep
     * their non-collected fallback). Otherwise
     * `(rows = (qti, qterm, exp_term, LIVE df), dictionary buckets)`:
-    * under tombstones the dictionary df is stale, so df is recounted over
-    * live candidate postings (reference count_documents skips removed
-    * pointers at query time, /root/reference/src/index.rs:281-297) and
-    * terms whose live df hits 0 drop out — the reference's df>0 guard.
-    * `buckets` covers ALL collected expansions (a superset after the
-    * recount drop — sound for scan pruning).
+    * under tombstones the dictionary df still counts removed docs, so it
+    * is brought down to the live df ([[liveDfs]]; the reference's
+    * count_documents skips removed pointers at query time,
+    * reference src/index.rs:281-297) and terms whose live df hits 0
+    * drop out — the reference's df>0 guard. `buckets` covers ALL matching
+    * dictionary terms (a superset after the drop — sound for scan pruning).
+    *
+    * Jobs: one dictionary scan ([[dictionaryRows]]), plus one under
+    * driver-held tombstones.
     */
   private[graft] def resolveExpansionsCollected(idx: InvertedIndex,
       qterms: Seq[(Int, String)],
       cap: Int): Option[(Seq[(Int, String, String, Long)], Seq[Int])] = {
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
     val prefixPred = qterms.map { case (_, t) => col("term").startsWith(lit(t)) }.reduce(_ || _)
-    val qdf = qterms.toSeq.toDF("qti", "qterm")
-    val bucketCol = if (idx.termdict.columns.contains("bucket")) col("bucket") else lit(-1)
-    val collected = idx.termdict.filter(prefixPred)
-      .join(broadcast(qdf), col("term").startsWith(col("qterm")))
-      .select(col("qti"), col("qterm"), col("term").as("exp_term"),
-        col("df").cast("long").as("df"), bucketCol.cast("int").as("bucket"))
-      .limit(cap + 1).collect()
-    if (collected.length > cap) return None
-    var rows = collected.toSeq
-      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val buckets = collected.map(_.getInt(4)).distinct.toSeq
-    if (idx.hasTombstones && rows.nonEmpty) {
-      val liveDf = recountLiveDf(idx, rows.map(_._3).distinct, buckets)
-      rows = rows.flatMap { case (qti, qterm, eterm, _) =>
-        liveDf.get(eterm).map(d => (qti, qterm, eterm, d))
+    dictionaryRows(idx, prefixPred, cap).flatMap { dict =>
+      // the prefix match on the driver: UTF-8 byte-prefix (Spark's
+      // startsWith) ≡ code-unit prefix for the tokenizer's strings
+      val rows = for {
+        (term, df, _) <- dict
+        (qti, qt) <- qterms if term.startsWith(qt)
+      } yield (qti, qt, term, df)
+      if (rows.length > cap) None
+      else {
+        val buckets = dict.map(_._3).distinct
+        val live = liveDfs(idx, dict.map(d => d._1 -> d._2).toMap, buckets)
+        Some((rows.flatMap { case (qti, qt, term, _) =>
+          live.get(term).map(d => (qti, qt, term, d)) }, buckets))
       }
     }
-    Some((rows, buckets))
   }
 
-  /** Live (tombstone-excluded) df for a collected expansion set — the
-    * occurrence recount the reference does at query time
-    * (/root/reference/src/index.rs:281-297). Bounded: the scan is
-    * term/bucket-pruned and the result is one row per expansion.
+  /** The dictionary rows `(term, df, bucket)` matching `pred`, df summed
+    * over the stored dictionary parts (base plus append deltas,
+    * [[InvertedIndex.dictParts]]): every part scanned by ONE job, the sum
+    * done on the driver — no union-groupBy shuffle. None when more than
+    * `cap` distinct terms match. A part holds one row per term, so each
+    * partition sends back at most `cap + 1` rows: a partition that was cut
+    * alone shows more than `cap` distinct terms.
     */
-  private def recountLiveDf(idx: InvertedIndex, eterms: Seq[String],
+  private def dictionaryRows(idx: InvertedIndex, pred: Column,
+      cap: Int): Option[Seq[(String, Long, Int)]] = {
+    val parts = if (idx.dictParts.nonEmpty) idx.dictParts else Seq(idx.termdict)
+    val matching = parts.map { p =>
+      val bucketCol = if (p.columns.contains("bucket")) col("bucket") else lit(-1)
+      p.filter(pred).select(col("term"), col("df").cast("long").as("df"),
+        bucketCol.cast("int").as("bucket"))
+    }.reduce(_.union(_))
+    val dict = DriverAgg.collectCapped(matching, math.min(cap.toLong + 1, Int.MaxValue).toInt)
+      .groupMapReduce(_.getString(0))(r => (r.getLong(1), r.getInt(2)))((a, b) => (a._1 + b._1, a._2))
+    if (dict.size > cap) None
+    else Some(dict.toSeq.map { case (t, (df, b)) => (t, df, b) })
+  }
+
+  /** Live (tombstone-excluded) df for dictionary terms given their
+    * dictionary df; terms left with no live posting are dropped. With
+    * driver-held tombstones the live df is the dictionary df MINUS the
+    * tombstoned docs' `occ` — one term/bucket-pruned scan of just those
+    * docs' postings, summed on the driver. Otherwise the occurrence recount
+    * over the live postings the reference does at query time
+    * (reference src/index.rs:281-297). The subtraction rests on the
+    * catalog invariant dictionary df = Σ occ over the posting store
+    * (CatalogInvariantProps).
+    */
+  private[graft] def liveDfs(idx: InvertedIndex, dictDf: Map[String, Long],
       buckets: Seq[Int]): Map[String, Long] =
-    idx.livePostings
-      .filter(candidatePredicate(idx, eterms, buckets))
-      .groupBy(col("term")).agg(sum(col("occ")).as("ldf"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (!idx.hasTombstones || dictDf.isEmpty) dictDf
+    else {
+      val terms = dictDf.keys.toSeq
+      val scan = idx.postings.filter(candidatePredicate(idx, terms, buckets))
+      if (idx.tombstoneIds.isDefined) {
+        val gone = DriverAgg.sumsByKey(
+          scan.filter(idx.tombstoned), "term", "occ")
+        dictDf.map { case (t, d) => t -> (d - gone.getOrElse(t, 0L)) }.filter(_._2 > 0)
+      } else
+        idx.withoutTombstoned(scan)
+          .groupBy(col("term")).agg(sum(col("occ")).as("ldf"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+
+  /** Most distinct terms a literal expansion lookup carries: the literal
+    * ships inside each stage's task binary.
+    */
+  private val MaxLiteralExpansionTerms = 4096
+
+  /** Candidate postings (a `term` column) joined to an expansion table on
+    * `term = exp_term`. An expansion table the driver already holds — a
+    * local relation, which is what every collected resolution and each
+    * model's [[ScoreModel.expansionColumns]] over it plan to — is
+    * collected without a job and rides INTO the posting scan as a literal
+    * hash table: slot `pmod(xxhash64(term), slots)` of a literal array
+    * holds an `exp_term → array<row>` map of the few terms hashing there,
+    * looked up and exploded per posting. The rows of the hash join,
+    * without broadcasting data the driver holds. Any other table, or one
+    * over more than [[MaxLiteralExpansionTerms]] terms, is
+    * broadcast-hash-joined.
+    */
+  private[graft] def joinExpansions(cand: DataFrame, exp: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def hashJoin = cand.join(broadcast(exp), col("term") === col("exp_term"))
+    if (!exp.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) return hashJoin
+    val byTerm = exp.collect().toSeq.groupBy(_.getAs[String]("exp_term"))
+    if (byTerm.size > MaxLiteralExpansionTerms) return hashJoin
+    val slots = math.max(byTerm.size, 1)
+    // the slot of each term with Spark's own xxhash64 (seed 42, as the
+    // xxhash64 column function below)
+    def slot(t: String) = Math.floorMod(
+      new XxHash64(Seq(Literal(t))).eval().asInstanceOf[Long], slots.toLong).toInt
+    val table = Seq.tabulate(slots)(_ => Map.empty[String, Seq[Row]]).toArray
+    byTerm.foreach { case (t, rows) => val i = slot(t); table(i) = table(i) + (t -> rows) }
+    val tableType = ArrayType(MapType(StringType, ArrayType(exp.schema)))
+    val lookup = org.apache.spark.sql.graftbridge.toColumn(Literal(
+      CatalystTypeConverters.createToCatalystConverter(tableType)(table.toSeq), tableType))
+    cand.withColumn("_exp", explode(
+        lookup(pmod(xxhash64(col("term")), lit(slots.toLong)).cast("int"))(col("term"))))
+      .select(cand.columns.toIndexedSeq.map(col) ++ exp.columns.map(c => col("_exp").getField(c).as(c)): _*)
+  }
 
   /** Score a candidate-postings DataFrame against a resolved expansion set:
     * the shared tail of the exhaustive path and [[BlockMaxTopK]].
@@ -1444,7 +1516,7 @@ object QueryEngine {
         ec.withColumn("eboost", col("eboost") * col("tboost").cast("double"))
       } else ec
     }
-    val joined = cand1.join(broadcast(expCols), col("term") === col("exp_term"))
+    val joined = joinExpansions(cand1, expCols)
     val scored = model.score(joined, stats, fb, qlenRaw, idx.numFields)
       .orderBy(col("score").desc, col("doc_id").asc)
     if (limit > 0) scored.limit(limit) else scored

@@ -9,9 +9,11 @@ import graft.index.FieldStats
   *
   *  - `before_each` (per-expanded-term precalculation from df and the doc
   *    map) → [[expansionColumns]]: derive extra columns on the tiny
-  *    expansion DataFrame, which gets broadcast into the postings join.
-  *    Catalyst constant-folds these once per expansion row — the same
-  *    hoisting the reference does by hand.
+  *    expansion DataFrame, which is then joined to the postings. On a
+  *    collected expansion set that frame is a local relation: Catalyst
+  *    evaluates the columns once per expansion row on the driver (no job)
+  *    and the rows ride into the posting scan as a literal lookup — the
+  *    same hoisting the reference does by hand.
   *  - `score` (per posting) + `finalize` (post-pass over the result set) →
   *    [[score]]: take the (postings ⋈ expansions) rows and produce the
   *    final per-document scores. BM25 is pure column arithmetic + two-level

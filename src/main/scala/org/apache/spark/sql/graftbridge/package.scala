@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made `ExpressionUtils`
   * `private[sql]`; extension libraries that ship custom Catalyst
@@ -24,4 +25,13 @@ package object graftbridge {
     case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false); ()
     case _ => ()
   }
+
+  /** `s` with every field nullable, recursively: the schema a parquet read
+    * resolves a written table to.
+    */
+  def asNullable(s: StructType): StructType = s.asNullable
+
+  /** The session's broadcast-join size threshold in bytes (≤ 0: disabled). */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 }

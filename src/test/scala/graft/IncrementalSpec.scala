@@ -273,6 +273,30 @@ class IncrementalSpec extends TestBase {
     assert(!idx2.hasTombstones && idx2.docstats.count() == 2)
   }
 
+  test("removing an empty id set is a no-op, and empty tombstone files count as none") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_rmempty_").toString
+    IndexCatalog.build(batch(batchA :+ ((5L, "abc", "q"))), "id", Seq("title", "description"),
+      root, nBuckets = 4)
+    def scores(idx: graft.index.InvertedIndex) = QueryEngine.query(idx, "abc", BM25()).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val before = scores(IndexCatalog.read(spark, root))
+    IndexCatalog.removeDocuments(spark, root, Seq.empty)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/tombstones")))
+    // a remove of an EMPTY DataFrame still writes a (row-less) part file
+    IndexCatalog.removeDocuments(root, Seq.empty[Long].toDF("doc_id"))
+    assert(Files.exists(java.nio.file.Paths.get(s"$root/tombstones")))
+    val idx = IndexCatalog.read(spark, root)
+    assert(!idx.hasTombstones, "empty tombstone files sent queries down the tombstone path")
+    assert(scores(idx) == before)
+    // …and the vacuum retires them without rewriting any table
+    val stagesBefore = IndexCatalog.manifest(spark, root).filter(_._1.startsWith("stage."))
+    IndexCatalog.vacuum(spark, root)
+    assert(IndexCatalog.manifest(spark, root).filter(_._1.startsWith("stage.")) == stagesBefore)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$root/tombstones")))
+    assert(scores(IndexCatalog.read(spark, root)) == before)
+  }
+
   test("manifest delete-then-rename crash window is recoverable") {
     val root = Files.createTempDirectory("graft_mrec_").toString
     IndexCatalog.build(batch(batchA), "id", Seq("title", "description"), root, nBuckets = 4)
