@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   * Layout under `root/`:
   * {{{
   *   manifest.json      completed stages, row counts, per-bucket lineage,
-  *                      table schemas
+  *                      table schemas, the dir of each table
   *   docstats/          parquet (doc_id, fl)
   *   postings/          parquet, hive-partitioned by bucket=pmod(xxhash64(term), B)
   *   termdict/          parquet (term, df, bucket)
@@ -24,12 +24,20 @@ import org.apache.spark.sql.types.StructType
   *   tombstones/        parquet (doc_id), absent until a remove
   * }}}
   *
-  * Stage DAG (each stage is written to `_tmp_<stage>` then atomically
-  * renamed, and recorded in the manifest — a rerun of [[build]] skips
-  * completed stages and derives later stages from the PERSISTED outputs of
-  * earlier ones, so a killed build resumes where it stopped):
+  * Stage DAG (each stage is written straight to its dir — nothing reads a
+  * stage before its manifest key commits — and recorded in the manifest; a
+  * rerun of [[build]] skips completed stages and derives later stages from
+  * the PERSISTED outputs of earlier ones, so a killed build resumes where
+  * it stopped):
   *
   *   docstats → postings → termdict → fieldstats → publish
+  *
+  * Every rewrite of a published index follows one rule: write into dirs no
+  * manifest names (`<table>.v<n>` for a [[vacuum]], `<table>.d<g>` /
+  * `<table>.g<g>` for an append), then publish them with ONE manifest
+  * write; after the commit [[sweep]] deletes every table dir the manifest
+  * no longer names. A crash before a commit leaves only orphan dirs, and a
+  * reader never finds a named table missing.
   *
   * Hash-bucketing `postings` by term gives query-time partition pruning:
   * once the expansion set is resolved against the (tiny) term dictionary,
@@ -39,15 +47,15 @@ import org.apache.spark.sql.types.StructType
   */
 object IndexCatalog {
 
-  val Stages: Seq[String] = Seq("docstats", "postings", "termdict", "fieldstats")
+  /** The four tables every index has, in build order. */
+  private val Tables = Seq("docstats", "postings", "termdict", "fieldstats")
 
-  /** Current directory of a small swappable table (termdict/fieldstats).
-    * A fresh build writes the plain name; each append publishes a NEW
-    * generation-named dir (`termdict.g3`) and repoints this manifest key in
-    * the same atomic manifest commit as `append.gen` — so there is never a
-    * moment where the live table is renamed away: readers either see the
-    * old manifest (old dir, still present) or the new one (new dir,
-    * complete before the commit).
+  /** Current directory of a table. A fresh build writes the plain name; an
+    * append rollup (`termdict.g3`) or a vacuum (`postings.v2`) publishes a
+    * NEW dir and repoints this manifest key in its commit's one manifest
+    * write — so the live table is never renamed away: readers either see
+    * the old manifest (old dir, still present) or the new one (new dir,
+    * complete before the commit). Any other dir name maps to itself.
     */
   private def tableDir(m: Map[String, String], table: String): String =
     m.getOrElse(s"table.$table", table)
@@ -102,18 +110,24 @@ object IndexCatalog {
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
     val dst = new Path(s"$root/manifest.json")
     if (f.exists(dst)) f.delete(dst, false)
-    f.rename(tmp, dst)
+    // a reader that found no manifest.json between the delete and this
+    // rename promotes the tmp itself (readManifest): nothing left to move
+    try f.rename(tmp, dst)
+    catch { case _: java.io.FileNotFoundException if f.exists(dst) => true }
     ()
   }
 
   // ---- table schemas, recorded in the manifest ----
 
-  /** Manifest key of the schema of the table in `dir`: the table name, or
-    * `<table>.gen` for the append-generation dirs (`termdict.d3`,
+  /** Manifest key of the schema of the table in `dir`: the table name —
+    * also for a vacuum's `<table>.v<n>`, written by build's own writers —
+    * or `<table>.gen` for the append-generation dirs (`termdict.d3`,
     * `fieldstats.g5`), which all share one schema.
     */
-  private def schemaKey(dir: String): String =
-    if (dir.contains('.')) s"schema.${dir.takeWhile(_ != '.')}.gen" else s"schema.$dir"
+  private def schemaKey(dir: String): String = dir.split('.') match {
+    case Array(table, gen) if !gen.startsWith("v") => s"schema.$table.gen"
+    case parts => s"schema.${parts.head}"
+  }
 
   /** DDL of the schema a parquet read resolves `df`, written with
     * `partitionBy`, to: data columns, then partition columns, all nullable.
@@ -134,9 +148,14 @@ object IndexCatalog {
   private def reader(spark: SparkSession, m: Map[String, String], dir: String): DataFrameReader =
     m.get(schemaKey(dir)).fold(spark.read)(spark.read.schema(_))
 
+  /** The table `table` (its current dir, [[tableDir]]) or the generation
+    * dir `table` names.
+    */
   private def readTable(spark: SparkSession, root: String, m: Map[String, String],
-      dir: String): DataFrame =
+      table: String): DataFrame = {
+    val dir = tableDir(m, table)
     reader(spark, m, dir).parquet(s"$root/$dir")
+  }
 
   /** Tombstones are always `(doc_id: long)` — every remove casts — so their
     * schema is a constant rather than a manifest key.
@@ -164,24 +183,23 @@ object IndexCatalog {
       case None => m
     }
 
-  /** Run one stage if not already recorded: produce `df`, write it to a tmp
-    * dir, atomically rename into place, record rows + duration + lineage.
+  /** Run one stage if not already recorded: produce `df`, write it straight
+    * to the stage's dir ([[tableDir]]), record rows + duration + schema —
+    * committed in a manifest write of its own, or (`commit = false`) left
+    * in the returned manifest for the caller's one commit.
     *
     * The manifest row count comes from an [[org.apache.spark.sql.Observation]]
     * attached to the WRITE job itself (one pass) — at 100-TB scale a
-    * `read.parquet(tmp).count()` after the write would pay a second full
+    * `read.parquet(dir).count()` after the write would pay a second full
     * scan of the postings table just for a metadata number.
     */
   private def stage(spark: SparkSession, root: String, name: String,
       manifest: Map[String, String], partitionBy: Seq[String] = Nil,
       extraMetrics: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      onMetrics: Map[String, Long] => Unit = _ => ())(
+      onMetrics: Map[String, Long] => Unit = _ => (), commit: Boolean = true)(
       df: => DataFrame): Map[String, String] = {
     if (manifest.contains(s"stage.$name.rows")) return manifest // resume: skip
-    val f = fs(spark, root)
-    val tmp = s"$root/_tmp_$name"
-    val dst = new Path(s"$root/$name")
-    f.delete(new Path(tmp), true)
+    val dir = tableDir(manifest, name)
     val t0 = System.nanoTime()
     val obs = org.apache.spark.sql.Observation()
     // extraMetrics ride the SAME write pass (guide §2.3: aggregate in the
@@ -193,19 +211,17 @@ object IndexCatalog {
     val frame = df
     val w = frame.observe(obs, metricCols.head, metricCols.tail: _*)
       .write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(s"$root/$dir")
     val rows = obs.get("rows").asInstanceOf[Long]
     if (extraMetrics.nonEmpty)
       onMetrics(extraMetrics.map(_._1)
         .map(n => n -> obs.get(n).asInstanceOf[Long]).toMap)
-    if (f.exists(dst)) f.delete(dst, true)
-    f.rename(new Path(tmp), dst)
     val secs = (System.nanoTime() - t0) / 1e9
     val m2 = manifest +
       (s"stage.$name.rows" -> rows.toString) +
       (s"stage.$name.secs" -> f"$secs%.3f") +
-      (schemaKey(name) -> schemaOf(frame, partitionBy))
-    writeManifest(spark, root, m2)
+      (schemaKey(dir) -> schemaOf(frame, partitionBy))
+    if (commit) writeManifest(spark, root, m2)
     m2
   }
 
@@ -225,9 +241,28 @@ object IndexCatalog {
   def build(docs: DataFrame, docIdCol: String, fieldCols: Seq[String],
       root: String, nBuckets: Int = 64): InvertedIndex = {
     val spark = docs.sparkSession
-    var m = readManifest(spark, root)
     val mem = IndexBuilder.build(docs, docIdCol, fieldCols)
+    val m = writeTables(spark, root, readManifest(spark, root), fieldCols.size, nBuckets,
+      mem.docstats, mem.postings.withColumn("bucket", bucketOf(col("term"), nBuckets)),
+      commit = true)
+    if (m.getOrElse("published", "") != "true")
+      writeManifest(spark, root, m +
+        ("config.nBuckets" -> nBuckets.toString) +
+        ("config.numFields" -> fieldCols.size.toString) +
+        ("config.fields" -> fieldCols.mkString(",")) +
+        ("published" -> "true"))
+    read(spark, root)
+  }
 
+  /** Write the four tables of an index into their dirs ([[tableDir]]) from
+    * its docstats and bucketed postings — [[build]]'s and [[vacuum]]'s one
+    * definition of them — skipping each stage `m` records; with `commit`
+    * each stage commits on its own (build's resume points). Returns `m`
+    * with every stage's keys and `lineage.postings`.
+    */
+  private def writeTables(spark: SparkSession, root: String, m0: Map[String, String],
+      nf: Int, nBuckets: Int, docstats: DataFrame, postings: DataFrame,
+      commit: Boolean): Map[String, String] = {
     // the docstats WRITE also observes the per-field token sums, so the
     // fieldstats stage below writes a literal 1-row frame instead of
     // re-scanning the persisted docstats — one corpus-sized pass saved per
@@ -238,13 +273,12 @@ object IndexCatalog {
     // partitions, so the partial agg emits ~docs×buckets rows and the
     // shuffle costs more than the tokenize it saved. Kept the two-pass
     // shape; see OPTIMIZATION_r06.md.)
-    val nf = fieldCols.size
     var statSums: Option[Map[String, Long]] = None
-    m = stage(spark, root, "docstats", m,
+    var m = stage(spark, root, "docstats", m0, commit = commit,
       extraMetrics = (0 until nf).map(i =>
         s"s$i" -> coalesce(sum(element_at(col("fl"), i + 1)), lit(0L))),
-      onMetrics = vals => statSums = Some(vals))(mem.docstats)
-    m = stage(spark, root, "postings", m, partitionBy = Seq("bucket")) {
+      onMetrics = vals => statSums = Some(vals))(docstats)
+    m = stage(spark, root, "postings", m, partitionBy = Seq("bucket"), commit = commit) {
       // repartition ON the bucket key before the partitioned write: one
       // task per bucket ⇒ one file per bucket, instead of every map task
       // spraying a file into every bucket dir (the small-files problem —
@@ -252,8 +286,7 @@ object IndexCatalog {
       // file-open-bound). Sorting within partitions by (term, doc_id)
       // gives parquet row-group min/max pruning for the query-time
       // `term IN (…)` filter and doc-ordered lists for block encoding.
-      mem.postings.withColumn("bucket", bucketOf(col("term"), nBuckets))
-        .repartition(nBuckets, col("bucket"))
+      postings.repartition(nBuckets, col("bucket"))
         .sortWithinPartitions(col("term"), col("doc_id"))
     }
     // termdict derives from the PERSISTED postings (resume-correct and
@@ -264,7 +297,7 @@ object IndexCatalog {
     // turns every query's expansion resolve from a full dictionary scan
     // into a handful of row groups; the extra range shuffle at build time
     // is over the dictionary (vocab-sized), not the corpus.
-    m = stage(spark, root, "termdict", m) {
+    m = stage(spark, root, "termdict", m, commit = commit) {
       // `rows` (posting rows per term) rides along so the per-bucket
       // lineage below folds from the VOCAB-sized dictionary instead of a
       // second full scan of the posting store; readers never see it
@@ -275,7 +308,7 @@ object IndexCatalog {
         .repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"))
     }
-    m = stage(spark, root, "fieldstats", m) {
+    m = stage(spark, root, "fieldstats", m, commit = commit) {
       statSums match {
         case Some(vals) =>
           // observed on the docstats write above — no re-scan; n is the
@@ -294,19 +327,13 @@ object IndexCatalog {
     // per-bucket lineage: posting row count per partition — folded from
     // the dictionary's `rows` column when present (vocab-sized scan); the
     // postings re-scan remains only for resumes over a pre-`rows` termdict
-    if (!m.contains("lineage.postings")) {
+    if (m.contains("lineage.postings")) m
+    else {
       val td = readTable(spark, root, m, "termdict")
-      val perBucket =
-        if (td.columns.contains("rows")) bucketLineage(td, col("rows"))
-        else bucketLineage(readTable(spark, root, m, "postings"))
-      m = m + ("lineage.postings" -> perBucket) +
-        ("config.nBuckets" -> nBuckets.toString) +
-        ("config.numFields" -> fieldCols.size.toString) +
-        ("config.fields" -> fieldCols.mkString(",")) +
-        ("published" -> "true")
-      writeManifest(spark, root, m)
+      m + ("lineage.postings" ->
+        (if (td.columns.contains("rows")) bucketLineage(td, col("rows"))
+        else bucketLineage(readTable(spark, root, m, "postings"))))
     }
-    read(spark, root)
   }
 
   /** Append generations whose termdict/fieldstats live as DELTA tables
@@ -326,7 +353,7 @@ object IndexCatalog {
     // explicit projection: build-time bookkeeping columns (`rows`, used
     // once for lineage) must not leak into the reader schema, and the
     // parts must be column-identical for the union below
-    (tableDir(m, "termdict") +: deltaGens(m).map(g => s"termdict.d$g"))
+    ("termdict" +: deltaGens(m).map(g => s"termdict.d$g"))
       .map(d => readTable(spark, root, m, d).select(col("term"), col("bucket"), col("df")))
 
   /** The live term dictionary: the parts' df summed per term. With no
@@ -345,7 +372,7 @@ object IndexCatalog {
     */
   private def statsParts(spark: SparkSession, root: String,
       m: Map[String, String], nf: Int): Seq[DataFrame] =
-    (tableDir(m, "fieldstats") +: deltaGens(m).map(g => s"fieldstats.d$g"))
+    ("fieldstats" +: deltaGens(m).map(g => s"fieldstats.d$g"))
       .map(d => readTable(spark, root, m, d)
         .select(col("n") +: (0 until nf).map(i => col(s"s$i")): _*))
 
@@ -364,6 +391,19 @@ object IndexCatalog {
     sumStats(statsParts(spark, root, m, m("config.numFields").toInt))
   }
 
+  /** The manifest of a published index this engine can open. A root an
+    * older engine version left mid-vacuum (`vacuum.pending`) is refused:
+    * its tables may already be compacted while its dictionary and stats
+    * are not, and the resume protocol for that state is gone.
+    */
+  private def published(spark: SparkSession, root: String): Map[String, String] = {
+    val m = readManifest(spark, root)
+    require(m.getOrElse("published", "") == "true", s"no published index at $root")
+    require(!m.contains("vacuum.pending"),
+      s"index at $root was left mid-vacuum by an older engine version — rebuild it")
+    m
+  }
+
   /** Largest tombstone set held on the driver. Its ids become one hash-set
     * predicate in every live plan, which ships with each task.
     */
@@ -376,8 +416,8 @@ object IndexCatalog {
     * tombstone dir, or one whose files hold no id (a remove of an empty
     * set), which must not send every query down the tombstone path.
     */
-  private def openTombstones(spark: SparkSession, root: String,
-      hold: Boolean): Option[(DataFrame, Option[Array[Long]])] = {
+  private def openTombstones(spark: SparkSession,
+      root: String): Option[(DataFrame, Option[Array[Long]])] = {
     val f = fs(spark, root)
     val dir = new Path(s"$root/tombstones")
     val files =
@@ -385,8 +425,7 @@ object IndexCatalog {
       else Array.empty[org.apache.hadoop.fs.FileStatus]
     if (files.isEmpty) return None
     val df = spark.read.schema(TombstoneSchema).parquet(dir.toString)
-    if (!hold ||
-        files.map(_.getLen).sum > org.apache.spark.sql.graftbridge.broadcastThreshold(spark))
+    if (files.map(_.getLen).sum > org.apache.spark.sql.graftbridge.broadcastThreshold(spark))
       return Some((df, None))
     // at most MaxHeldTombstones + 1 rows per partition reach the driver; a
     // partition can only have been cut if more than MaxHeldTombstones rows
@@ -404,16 +443,12 @@ object IndexCatalog {
     * stored field stats with the tombstoned docs' docstats rows SUBTRACTED
     * — the snapshot's live stats, so queries run no stats job. A tombstone
     * set too large to hold leaves the live stats to
-    * [[InvertedIndex.fieldStats]]' recount — and so does a
-    * vacuum caught between its table rewrites and its commit, when the
-    * stored dictionary and stats no longer describe the posting store.
+    * [[InvertedIndex.fieldStats]]' recount.
     */
   def read(spark: SparkSession, root: String): InvertedIndex = {
-    val m = readManifest(spark, root)
-    require(m.getOrElse("published", "") == "true", s"no published index at $root")
+    val m = published(spark, root)
     val nf = m("config.numFields").toInt
-    val tombs = openTombstones(spark, root,
-      hold = m.getOrElse("vacuum.pending", "") != "true")
+    val tombs = openTombstones(spark, root)
     val parts = dictParts(spark, root, m)
     val idx = InvertedIndex(
       postings = readTable(spark, root, m, "postings"),
@@ -480,33 +515,29 @@ object IndexCatalog {
     * partitioned by (term bucket, doc-id range group).
     *
     * Re-invoking after an [[addDocuments]] append folds the pending delta
-    * generations in INCREMENTALLY ([[foldAppendDeltas]]) — O(delta), not a
-    * rebuild from the full posting store. `blockSize`/`rangesPerGroup`
-    * apply to a FULL (re)build only; incremental folds always use the
-    * manifest's recorded config.
+    * generations in INCREMENTALLY ([[rewriteBlocks]]) — O(delta), not a
+    * rebuild from the full posting store — after finishing any block
+    * rewrite a crash left between its swap marker and its commit.
+    * `blockSize`/`rangesPerGroup` apply to a FULL (re)build only;
+    * incremental folds always use the manifest's recorded config.
     */
   def buildBlocks(spark: SparkSession, root: String,
       blockSize: Long = PostingBlocks.DefaultBlockSize,
       rangesPerGroup: Long = DefaultRangesPerGroup): Unit = {
-    var m = readManifest(spark, root)
-    require(m.getOrElse("published", "") == "true", s"no published index at $root")
+    var m = published(spark, root)
     if (m.contains("stage.blocks.rows")) {
       if (m.getOrElse("config.blockFormat", "1") == BlockFormat) {
-        // current-format table: fold pending append deltas (O(delta)), or
-        // nothing to do
-        if (m.getOrElse("blocks.pending", "").nonEmpty || m.contains("blocks.swap"))
-          foldAppendDeltas(spark, root)
+        if (m.contains("blocks.swap")) swapBlocks(spark, root)
+        foldAppendDeltas(spark, root, readManifest(spark, root))
         return
       }
-      // stale on-disk format: drop and rebuild (with any fold leftovers)
-      fs(spark, root).delete(new Path(s"$root/blocks"), true)
-      fs(spark, root).delete(new Path(s"$root/$BlockFoldTmp"), true)
-      m = m -- BlockStateKeys
-      writeManifest(spark, root, m)
+      // stale on-disk format: drop and rebuild
+      dropBlocks(spark, root)
+      m = readManifest(spark, root)
     }
     val nf = m("config.numFields").toInt
     val nb = m("config.nBuckets").toInt
-    m = stage(spark, root, "blocks", m, partitionBy = Seq("bucket", "rg")) {
+    m = stage(spark, root, "blocks", m, partitionBy = Seq("bucket", "rg"), commit = false) {
       PostingBlocks.fromPostings(readTable(spark, root, m, "postings"), nf, blockSize)
         .toDF().withColumn("bucket", bucketOf(col("term"), nb))
         .withColumn("rg", rgCol(col("block_id"), rangesPerGroup))
@@ -532,19 +563,41 @@ object IndexCatalog {
     * blockSize/rangesPerGroup it is given — the sanctioned path for
     * re-tuning the block layout (an incremental fold always keeps the
     * recorded config, and buildBlocks on a current-format table ignores
-    * new layout params). Key-strip commits before the dir delete, so a
-    * crash between the two leaves an orphan dir that the next full build
-    * overwrites — never a phantom stage.
+    * new layout params). Key-strip commits before the sweep deletes the
+    * dirs, so a crash between the two leaves an orphan dir that the next
+    * full build overwrites — never a phantom stage.
     */
-  def dropBlocks(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
-    writeManifest(spark, root, readManifest(spark, root) -- BlockStateKeys)
-    f.delete(new Path(s"$root/blocks"), true)
-    f.delete(new Path(s"$root/$BlockFoldTmp"), true)
-    ()
-  }
+  def dropBlocks(spark: SparkSession, root: String): Unit =
+    commit(spark, root, readManifest(spark, root) -- BlockStateKeys)
 
   private val BlockFoldTmp = "_tmp_blocks_fold"
+
+  /** Write `m` as the manifest, then [[sweep]]. */
+  private def commit(spark: SparkSession, root: String, m: Map[String, String]): Unit = {
+    writeManifest(spark, root, m)
+    sweep(spark, root, m)
+  }
+
+  /** Delete every catalog dir under `root` that `m` does not name: the
+    * generations a commit superseded, and the orphans of a write that
+    * crashed before its commit. Runs right after a commit (single writer),
+    * so superseded generations never outlive the commit that retired them.
+    * A staged append's promoted dirs stay until its publish commits.
+    */
+  private def sweep(spark: SparkSession, root: String, m: Map[String, String]): Unit = {
+    val gens = deltaGens(m) ++ m.get("append.staged")
+    val named = Tables.map(tableDir(m, _)).toSet ++
+      gens.flatMap(g => Seq("termdict", "fieldstats").flatMap(t => Seq(s"$t.d$g", s"$t.g$g"))) ++
+      Seq("blocks").filter(_ => m.contains("stage.blocks.rows")) ++
+      Seq(BlockFoldTmp).filter(_ => m.contains("blocks.swap"))
+    val f = fs(spark, root)
+    f.listStatus(new Path(root)).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && (Tables :+ "blocks" :+ BlockFoldTmp).contains(n.takeWhile(_ != '.')) &&
+          !named(n))
+        f.delete(st.getPath, true)
+    }
+  }
 
   /** Delta posting files of the given append generations: publishAppend
     * moves staged part-files in under `append_<g>_` names, so the fold can
@@ -566,137 +619,127 @@ object IndexCatalog {
     out.result()
   }
 
-  /** Move every `bucket=X/rg=Y` dir under `tmp` into `live`, replacing the
-    * existing dir. Idempotent: a partition already swapped is gone from
-    * tmp; a crash between delete and rename leaves the tmp copy, which the
-    * resume moves. `maxRenames` exists ONLY for fault injection (rename
-    * that many partitions and stop — the exact on-disk state a crash in
-    * the middle of the loop leaves behind); production callers use the
-    * unbounded default, so the fuzzed protocol IS the production protocol.
-    * Partitions are visited in sorted order so the fault-injected prefix
-    * is deterministic.
-    */
-  private def swapBlockPartitions(f: FileSystem, tmp: String, live: String,
-      maxRenames: Long = Long.MaxValue): Unit = {
-    val tp = new Path(tmp)
-    if (!f.exists(tp)) return
-    var renamed = 0L
-    f.listStatus(tp).sortBy(_.getPath.getName).foreach { b =>
-      if (b.isDirectory && b.getPath.getName.startsWith("bucket="))
-        f.listStatus(b.getPath).sortBy(_.getPath.getName).foreach { r =>
-          if (renamed < maxRenames &&
-              r.isDirectory && r.getPath.getName.startsWith("rg=")) {
-            val dstDir = new Path(s"$live/${b.getPath.getName}")
-            f.mkdirs(dstDir)
-            val dst = new Path(dstDir, r.getPath.getName)
-            f.delete(dst, true)
-            f.rename(r.getPath, dst)
-            renamed += 1
-          }
-        }
-    }
+  /** The `bucket=X/rg=Y` group dirs under `dir`. */
+  private def blockGroups(f: FileSystem, dir: String): Seq[String] = {
+    val d = new Path(dir)
+    if (!f.exists(d)) return Nil
+    for {
+      b <- f.listStatus(d).toSeq.sortBy(_.getPath.getName)
+      if b.isDirectory && b.getPath.getName.startsWith("bucket=")
+      r <- f.listStatus(b.getPath).toSeq.sortBy(_.getPath.getName)
+      if r.isDirectory && r.getPath.getName.startsWith("rg=")
+    } yield s"${b.getPath.getName}/${r.getPath.getName}"
   }
 
-  /** Incrementally fold pending append generations into the block table:
-    * decode ONLY the block rows of the (bucket, rg) partitions the delta
-    * postings touch, merge with the delta, re-encode, and swap exactly
-    * those partition dirs. Every untouched block file stays byte-identical
-    * (asserted by IncrementalBlockSpec). With fresh (monotone) appended
-    * doc-ids the touched set is the delta's own new rg dirs plus at most
-    * one boundary rg per bucket — O(delta), where the round-4 engine paid
-    * an O(corpus) re-encode from the full posting store per mutation.
-    *
-    * Crash protocol: rebuilt partitions are FULLY written under
-    * `_tmp_blocks_fold` before `blocks.swap` is committed; the swap
-    * (delete live dir, move tmp dir in, per partition) runs only with the
-    * marker set and resumes by moving whatever is left in tmp;
-    * `blocks.pending` is trimmed only in the final commit, so a crash at
-    * any point re-enters the right phase. Single-writer assumption as for
-    * all mutations (see [[addDocuments]]).
+  /** Fold the pending append generations into the block table: the groups
+    * are the `(bucket, rg)` pairs the delta postings touch — with fresh
+    * (monotone) appended doc-ids, the delta's own new rg dirs plus at most
+    * one boundary rg per bucket — and the delta is merged into their
+    * decoded postings. O(delta), where the round-4 engine paid an
+    * O(corpus) re-encode from the full posting store per mutation.
     */
-  private def foldAppendDeltas(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
+  private def foldAppendDeltas(spark: SparkSession, root: String, m: Map[String, String]): Unit = {
+    val gens = m.getOrElse("blocks.pending", "").split(",").filter(_.nonEmpty).toSeq
+    if (gens.isEmpty) return
+    val dir = tableDir(m, "postings")
+    val deltaFiles = listAppendFiles(fs(spark, root), s"$root/$dir", gens.toSet)
+    if (deltaFiles.isEmpty) { // empty delta (e.g. all-empty docs)
+      writeManifest(spark, root, m - "blocks.pending"); return
+    }
+    // basePath keeps the hive `bucket` partition column on the explicit
+    // file list
+    val delta = reader(spark, m, dir).option("basePath", s"$root/$dir")
+      .parquet(deltaFiles: _*)
+      .withColumn("rg", rgCol(longDiv(col("doc_id"), m("config.blockSize").toLong),
+        m("config.rangesPerGroup").toLong))
+    val pairs = DriverAgg.sumsByKey(delta.select(concat_ws(":", col("bucket"), col("rg")).as("g"),
+      lit(1L).as("n")), "g", "n").keys.toSeq
+    val (bks, rgs) = pairs.map(_.split(":")).map(p => (p(0).toInt, p(1).toInt)).unzip
+    // bucket/rg IN (…) partition-prunes the scan; the exact pair filter
+    // keeps cartesian-extra partitions out of the rewrite
+    rewriteBlocks(spark, root, m, col("bucket").isin(bks.distinct: _*) &&
+      col("rg").isin(rgs.distinct: _*) && concat_ws(":", col("bucket"), col("rg")).isin(pairs: _*),
+      // defense-in-depth idempotency: a doc's postings are written by
+      // exactly one generation, so any old∩delta overlap is row-equal
+      _.unionByName(delta.select("term", "doc_id", "tf", "fl", "occ"))
+        .dropDuplicates("term", "doc_id"),
+      gens)
+  }
+
+  /** Rewrite the block table's `(bucket, rg)` groups — the one block
+    * rewrite, shared by the append fold and the vacuum compaction:
+    *  1. `groups` picks them;
+    *  2. their blocks are decoded;
+    *  3. `edit` changes the decoded postings (merges a delta in, or drops
+    *     the tombstoned docs);
+    *  4. the result is re-encoded into `_tmp_blocks_fold`;
+    *  5. one manifest write commits the `blocks.swap` marker: the folded
+    *     generations, the table's new row count, and the groups that
+    *     emptied (no rewritten counterpart replaces them);
+    *  6–7. [[swapBlocks]] moves the groups in and commits.
+    * Every block file outside the groups stays byte-identical (asserted
+    * by IncrementalBlockSpec). Single-writer assumption as for all
+    * mutations (see [[addDocuments]]).
+    */
+  private def rewriteBlocks(spark: SparkSession, root: String, m: Map[String, String],
+      groups: org.apache.spark.sql.Column, edit: DataFrame => DataFrame,
+      folded: Seq[String]): Unit = {
+    val nf = m("config.numFields").toInt
+    val nb = m("config.nBuckets").toInt
+    val bs = m("config.blockSize").toLong
+    val rpg = m("config.rangesPerGroup").toLong
     val tmp = s"$root/$BlockFoldTmp"
-    var m = readManifest(spark, root)
-    while (m.contains("blocks.swap") ||
-        m.getOrElse("blocks.pending", "").nonEmpty) {
-      if (!m.contains("blocks.swap")) {
-        val gens = m("blocks.pending").split(",").filter(_.nonEmpty).toSeq
-        val nf = m("config.numFields").toInt
-        val nb = m("config.nBuckets").toInt
-        val bs = m("config.blockSize").toLong
-        val rpg = m("config.rangesPerGroup").toLong
-        val deltaFiles = listAppendFiles(f, s"$root/postings", gens.toSet)
-        if (deltaFiles.isEmpty) { // empty delta (e.g. all-empty docs)
-          writeManifest(spark, root, m - "blocks.pending"); return
-        }
-        // basePath keeps the hive `bucket` partition column on the
-        // explicit file list
-        val delta = reader(spark, m, "postings").option("basePath", s"$root/postings")
-          .parquet(deltaFiles: _*)
-          .withColumn("block_id", longDiv(col("doc_id"), bs))
-          .withColumn("rg", rgCol(col("block_id"), rpg))
-        val pairs = delta.select(col("bucket"), col("rg")).distinct()
-          .collect().map(r => (r.getInt(0), r.getInt(1)))
-        val bks = pairs.map(_._1).distinct.toSeq
-        val rgs = pairs.map(_._2).distinct.toSeq
-        val pairKeys = pairs.map { case (b, r) => s"$b:$r" }.toSeq
-        // bucket/rg IN (…) partition-prunes the scan; the exact pair
-        // filter keeps cartesian-extra partitions out of the rewrite
-        val old = readTable(spark, root, m, "blocks")
-          .filter(col("bucket").isin(bks: _*) && col("rg").isin(rgs: _*) &&
-            concat_ws(":", col("bucket"), col("rg")).isin(pairKeys: _*))
-          .cache()
-        val oldCnt = old.count()
-        val merged = PostingBlocks.toPostings(old, nf, bs)
-          .unionByName(delta.select("term", "doc_id", "tf", "fl", "occ"))
-          // defense-in-depth idempotency: a doc's postings are written by
-          // exactly one generation, so any old∩delta overlap is row-equal
-          .dropDuplicates("term", "doc_id")
-        val fresh = PostingBlocks.fromPostings(merged, nf, bs)
-          .toDF().withColumn("bucket", bucketOf(col("term"), nb))
-          .withColumn("rg", rgCol(col("block_id"), rpg))
-          .repartition(col("bucket"), col("rg"))
-          .sortWithinPartitions(col("term"), col("block_id"))
-        f.delete(new Path(tmp), true)
-        val obs = org.apache.spark.sql.Observation()
-        fresh.observe(obs, count(lit(1)).as("rows"))
-          .write.partitionBy("bucket", "rg").parquet(tmp)
-        val newCnt = obs.get("rows").asInstanceOf[Long]
-        old.unpersist()
-        val total = m("stage.blocks.rows").toLong - oldCnt + newCnt
-        m = readManifest(spark, root) +
-          ("blocks.swap" -> gens.mkString(",")) +
-          ("blocks.swap.rows" -> total.toString) +
-          (schemaKey("blocks") -> schemaOf(fresh, Seq("bucket", "rg")))
-        writeManifest(spark, root, m)
-      }
-      // swap phase + final commit: trim exactly the folded generations
-      // (another append may have queued more while a crashed swap waited).
-      // This loop may also be finishing a VACUUM's crashed block swap
-      // (blocks.swap = "vacuum", reachable when a serving job calls
-      // buildBlocks before anyone re-runs vacuum): that swap carries a
-      // `blocks.swap.drop` list of partitions whose blocks all emptied —
-      // apply it here too, or the retired dirs would survive with a stale
-      // row count (masked only while the tombstones still exist).
-      swapBlockPartitions(f, tmp, s"$root/blocks")
-      m = readManifest(spark, root)
-      m.getOrElse("blocks.swap.drop", "").split(";").filter(_.nonEmpty)
-        .foreach(rel => f.delete(new Path(s"$root/blocks/$rel"), true))
-      val folded = m("blocks.swap").split(",").toSet
-      val remaining = m.getOrElse("blocks.pending", "").split(",")
-        .filter(g => g.nonEmpty && !folded.contains(g))
-      val base = m - "blocks.swap" - "blocks.swap.rows" - "blocks.swap.drop" +
-        ("stage.blocks.rows" ->
-          m.getOrElse("blocks.swap.rows", m("stage.blocks.rows")))
-      writeManifest(spark, root,
-        if (remaining.isEmpty) base - "blocks.pending"
-        else base + ("blocks.pending" -> remaining.mkString(",")))
-      f.delete(new Path(tmp), true)
-      m = readManifest(spark, root)
-    }
+    val old = readTable(spark, root, m, "blocks").filter(groups).cache()
+    // blocks per old group, in one job that also fills the cache
+    val oldRows = DriverAgg.sumsByKey(old.select(concat(lit("bucket="), col("bucket"),
+      lit("/rg="), col("rg")).as("g"), lit(1L).as("n")), "g", "n")
+    val fresh = PostingBlocks.fromPostings(edit(PostingBlocks.toPostings(old, nf, bs)), nf, bs)
+      .toDF().withColumn("bucket", bucketOf(col("term"), nb))
+      .withColumn("rg", rgCol(col("block_id"), rpg))
+      .repartition(col("bucket"), col("rg"))
+      .sortWithinPartitions(col("term"), col("block_id"))
+    val obs = org.apache.spark.sql.Observation()
+    fresh.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").partitionBy("bucket", "rg").parquet(tmp)
+    val newRows = obs.get("rows").asInstanceOf[Long]
+    old.unpersist()
+    val rewritten = blockGroups(fs(spark, root), tmp).toSet
+    writeManifest(spark, root, m +
+      ("blocks.swap" -> folded.mkString(",")) +
+      ("blocks.swap.rows" -> (m("stage.blocks.rows").toLong - oldRows.values.sum + newRows).toString) +
+      ("blocks.swap.drop" -> oldRows.keys.filterNot(rewritten).toSeq.sorted.mkString(";")) +
+      (schemaKey("blocks") -> schemaOf(fresh, Seq("bucket", "rg"))))
+    swapBlocks(spark, root)
   }
 
+  /** Finish the block rewrite whose `blocks.swap` marker is committed: move
+    * each rewritten group dir over its live one, delete the emptied
+    * groups, then commit the new row count and trim the folded generations
+    * from `blocks.pending` (another append may have queued more). Re-runs
+    * cleanly from a crash at any point: a moved group is gone from the tmp
+    * dir, an emptied group never has a rewritten copy, and the commit is
+    * last. [[readBlocks]] refuses the table while the marker is set.
+    */
+  private def swapBlocks(spark: SparkSession, root: String): Unit = {
+    val f = fs(spark, root)
+    val m = readManifest(spark, root)
+    val tmp = s"$root/$BlockFoldTmp"
+    blockGroups(f, tmp).foreach { g =>
+      val dst = new Path(s"$root/blocks/$g")
+      f.mkdirs(dst.getParent)
+      f.delete(dst, true)
+      f.rename(new Path(s"$tmp/$g"), dst)
+    }
+    m.getOrElse("blocks.swap.drop", "").split(";").filter(_.nonEmpty)
+      .foreach(g => f.delete(new Path(s"$root/blocks/$g"), true))
+    val folded = m("blocks.swap").split(",").toSet
+    val pending = m.getOrElse("blocks.pending", "").split(",")
+      .filter(g => g.nonEmpty && !folded.contains(g))
+    val base = m -- Seq("blocks.swap", "blocks.swap.rows", "blocks.swap.drop", "blocks.pending") +
+      ("stage.blocks.rows" -> m("blocks.swap.rows"))
+    commit(spark, root,
+      if (pending.isEmpty) base else base + ("blocks.pending" -> pending.mkString(",")))
+  }
   def readBlocks(spark: SparkSession, root: String): (org.apache.spark.sql.Dataset[PostingBlocks.Block], Long, Long) = {
     import spark.implicits._
     val m = readManifest(spark, root)
@@ -721,96 +764,6 @@ object IndexCatalog {
     // terms' buckets and the probe/survivor decodes to their rg dirs —
     // without them every WAND query reads the whole block store
     (readTable(spark, root, m, "blocks").as[PostingBlocks.Block], bs, rpg)
-  }
-
-  /** Incrementally compact the block table for a vacuum: re-encode only
-    * the (bucket, rg) partitions containing tombstoned doc-ids — decode,
-    * anti-join the tombstone set, re-encode, swap those dirs; every other
-    * block file is untouched. Runs BEFORE the vacuum's final commit
-    * (tombstones still on disk) and is idempotent under crash-resume:
-    * re-decoding an already-compacted partition and anti-joining the same
-    * tombstones is a fixpoint.
-    */
-  /** Returns false ONLY under `crashMidSwap` fault injection (the caller
-    * then aborts the vacuum as a simulated crash after one partition
-    * rename with the swap marker still set).
-    */
-  private def compactBlocks(spark: SparkSession, root: String,
-      idx: InvertedIndex, crashMidSwap: Boolean = false): Boolean = {
-    val f = fs(spark, root)
-    val tmp = s"$root/$BlockFoldTmp"
-    var m = readManifest(spark, root)
-    if (!idx.hasTombstones && !m.contains("blocks.swap"))
-      return true
-    if (!m.contains("blocks.swap")) {
-      val nf = m("config.numFields").toInt
-      val nb = m("config.nBuckets").toInt
-      val bs = m("config.blockSize").toLong
-      val rpg = m("config.rangesPerGroup").toLong
-      // the rg of each tombstoned id: on the driver when the ids are held
-      // there (the same exact long division as rgCol)
-      val rgs = idx.tombstoneIds match {
-        case Some(ids) => ids.map(id => Math.toIntExact(id / bs / rpg)).distinct.toSeq
-        case None => idx.tombstones.select(rgCol(longDiv(col("doc_id"), bs), rpg)
-          .as("rg")).distinct().collect().map(_.getInt(0)).toSeq
-      }
-      if (rgs.isEmpty) return true
-      val old = readTable(spark, root, m, "blocks")
-        .filter(col("rg").isin(rgs: _*)).cache()
-      val oldPairs = old.select(col("bucket"), col("rg")).distinct().collect()
-        .map(r => s"bucket=${r.getInt(0)}/rg=${r.getInt(1)}")
-      if (oldPairs.isEmpty) { old.unpersist(); return true }
-      val oldCnt = old.count()
-      val live = idx.withoutTombstoned(PostingBlocks.toPostings(old, nf, bs))
-      val fresh = PostingBlocks.fromPostings(live, nf, bs)
-        .toDF().withColumn("bucket", bucketOf(col("term"), nb))
-        .withColumn("rg", rgCol(col("block_id"), rpg))
-        .repartition(col("bucket"), col("rg"))
-        .sortWithinPartitions(col("term"), col("block_id"))
-      f.delete(new Path(tmp), true)
-      val obs = org.apache.spark.sql.Observation()
-      fresh.observe(obs, count(lit(1)).as("rows"))
-        .write.partitionBy("bucket", "rg").parquet(tmp)
-      val newCnt = obs.get("rows").asInstanceOf[Long]
-      old.unpersist()
-      val total = m("stage.blocks.rows").toLong - oldCnt + newCnt
-      // the explicit drop list covers ONLY partitions whose blocks all
-      // emptied (no tmp counterpart exists to replace them). It must NOT
-      // include rewritten pairs: the swap below renames each tmp dir away
-      // as it lands, so a crash mid-swap + resume would re-delete an
-      // already-swapped live dir with its tmp copy gone — permanent block
-      // loss (the pre-round-5-review code did exactly that; pinned by
-      // LifecycleProps' mid-swap crash fuzz)
-      val freshPairs = (for {
-        b <- f.listStatus(new Path(tmp)).toSeq
-        if b.isDirectory && b.getPath.getName.startsWith("bucket=")
-        r <- f.listStatus(b.getPath).toSeq
-        if r.isDirectory && r.getPath.getName.startsWith("rg=")
-      } yield s"${b.getPath.getName}/${r.getPath.getName}").toSet
-      m = readManifest(spark, root) + ("blocks.swap" -> "vacuum") +
-        ("blocks.swap.rows" -> total.toString) +
-        (schemaKey("blocks") -> schemaOf(fresh, Seq("bucket", "rg"))) +
-        ("blocks.swap.drop" -> oldPairs.filterNot(freshPairs).mkString(";"))
-      writeManifest(spark, root, m)
-    }
-    m = readManifest(spark, root)
-    if (crashMidSwap) { // fault injection: die after ONE partition rename
-      swapBlockPartitions(f, tmp, s"$root/blocks", maxRenames = 1)
-      return false
-    }
-    // SWAP first (each rename replaces the stale live dir), THEN the
-    // emptied-pair drops, THEN the commit: every step re-runs cleanly from
-    // any crash point — a swapped pair's tmp absence makes the swap a
-    // no-op, a dropped pair never has fresh data, and the commit is last
-    swapBlockPartitions(f, tmp, s"$root/blocks")
-    m.getOrElse("blocks.swap.drop", "").split(";").filter(_.nonEmpty)
-      .foreach(rel => f.delete(new Path(s"$root/blocks/$rel"), true))
-    writeManifest(spark, root,
-      readManifest(spark, root) - "blocks.swap" - "blocks.swap.drop" -
-        "blocks.swap.rows" +
-        ("stage.blocks.rows" -> m("blocks.swap.rows")))
-    f.delete(new Path(tmp), true)
-    true
   }
 
   /** Incremental append — the reference's headline mutation
@@ -847,8 +800,10 @@ object IndexCatalog {
     * `vacuum`) assume one writer at a time per index root — the crash
     * protocol makes any PREFIX of a mutation resumable, but two writers
     * interleaving check-then-act guards can interleave stage dirs and
-    * generation numbers. Readers are unrestricted. A deployment with
-    * concurrent writers must serialize them externally (the
+    * generation numbers. Readers are unrestricted but for one window: a
+    * block rewrite's partition swap (see [[rewriteBlocks]]), during which
+    * [[readBlocks]] refuses the block table while the swap marker is set.
+    * A deployment with concurrent writers must serialize them externally (the
     * Iceberg-catalog binding this layout is shaped for does it with
     * optimistic commit retries). The one cross-writer hazard with a safe
     * in-engine answer — a remove landing between a running vacuum's stage
@@ -878,20 +833,7 @@ object IndexCatalog {
       root: String, compactDeltasEvery: Int = 8,
       extra: Map[String, String] = Map.empty): Int = {
     val spark = docs.sparkSession
-    var m = readManifest(spark, root)
-    require(m.getOrElse("published", "") == "true", s"no published index at $root")
-    // A CRASHED VACUUM must be completed before any append may stage:
-    // the crashed vacuum's finished stages wrote PLAIN termdict/fieldstats
-    // dirs while the manifest still points at generation dirs — an append
-    // publishing in that state would (a) GC those plain dirs as "old
-    // generations" and (b) leave the resumed vacuum's stage keys pointing
-    // at tables that never saw this append's docs. Finishing the vacuum
-    // first restores the invariant every append assumes: the manifest's
-    // stage keys describe the live tables.
-    if (m.getOrElse("vacuum.pending", "") == "true") {
-      vacuum(spark, root)
-      m = readManifest(spark, root)
-    }
+    val m = published(spark, root)
     val fieldCols = m("config.fields").split(",").toSeq
     val nf = fieldCols.size
     val nb = m("config.nBuckets").toInt
@@ -995,8 +937,8 @@ object IndexCatalog {
         }
       }
     }
-    moveFiles(s"$stageDir/postings", s"$root/postings")
-    moveFiles(s"$stageDir/docstats", s"$root/docstats")
+    val m = readManifest(spark, root)
+    for (t <- Seq("postings", "docstats")) moveFiles(s"$stageDir/$t", s"$root/${tableDir(m, t)}")
 
     // promote the small staged tables into GENERATION-NAMED dirs — delta
     // appends to `<table>.d<g>` (the base stays live; readers union it
@@ -1006,7 +948,6 @@ object IndexCatalog {
     // leaves the index readable (old manifest → old dirs, still intact).
     // Skip when the staged copy is gone AND the generation dir exists
     // (already promoted by a previous attempt).
-    var m = readManifest(spark, root)
     // legacy default "rollup" keeps the pre-delta full-merge semantics for
     // stages written by an older engine version
     val kind = m.getOrElse("append.staged.kind", "rollup")
@@ -1031,40 +972,24 @@ object IndexCatalog {
     // generation: the table stays live for readers of the pre-append
     // manifest, and the next buildBlocks folds the delta in O(delta)
     // (foldAppendDeltas) instead of rebuilding from the full posting store
-    m = readManifest(spark, root)
-    val promoted = promoteStreamMarker(m)
-    var commit = promoted - "append.staged" - "append.staged.kind" +
+    var out = promoteStreamMarker(m) - "append.staged" - "append.staged.kind" +
       ("append.gen" -> g.toString)
-    commit =
+    out =
       if (kind == "delta")
-        commit + ("append.deltas" -> (deltaGens(m) :+ g.toString).mkString(","))
+        out + ("append.deltas" -> (deltaGens(m) :+ g.toString).mkString(","))
       else
-        commit - "append.deltas" +
+        out - "append.deltas" +
           ("table.termdict" -> s"termdict.g$g") +
           ("table.fieldstats" -> s"fieldstats.g$g")
     if (m.contains("stage.blocks.rows")) {
       val p = m.getOrElse("blocks.pending", "")
-      commit += ("blocks.pending" ->
-        (if (p.isEmpty) g.toString else s"$p,$g"))
+      out += ("blocks.pending" -> (if (p.isEmpty) g.toString else s"$p,$g"))
     }
-    writeManifest(spark, root, commit)
-
-    // post-commit garbage collection (all idempotent; readers holding the
-    // OLD manifest race this — the same already-published-read lag shape
-    // as the delta posting files above). A delta append retires nothing;
-    // a rollup retires the old base and every folded delta dir.
-    if (kind != "delta") {
-      def gcOldGens(table: String): Unit =
-        f.listStatus(new Path(root)).foreach { st =>
-          val n = st.getPath.getName
-          if (st.isDirectory &&
-              (n == table || n.startsWith(s"$table.d") ||
-                (n.startsWith(s"$table.g") && n != s"$table.g$g")))
-            f.delete(st.getPath, true)
-        }
-      gcOldGens("termdict")
-      gcOldGens("fieldstats")
-    }
+    // the sweep retires what a rollup superseded — the old base and every
+    // folded delta dir (readers holding the OLD manifest race this, the
+    // same already-published-read lag shape as the delta posting files
+    // above); a delta append retires nothing
+    commit(spark, root, out)
     f.delete(new Path(stageDir), true)
     ()
   }
@@ -1100,19 +1025,14 @@ object IndexCatalog {
     * `published` is the final commit. Re-invoking after a crash at ANY
     * point resumes; re-invoking after completion is a no-op read.
     *
-    * Caller contract: shards published, not mid-vacuum, same field layout
+    * Caller contract: shards published, same field layout
     * + tokenizer + bucket count, disjoint doc_id sets, `out` empty or a
     * prior attempt over the SAME sources.
     */
   def mergeShards(spark: SparkSession, shards: Seq[String],
       out: String): InvertedIndex = {
     require(shards.size >= 2, "need at least two shards")
-    val ms = shards.map(r => readManifest(spark, r))
-    ms.zip(shards).foreach { case (m, r) =>
-      require(m.getOrElse("published", "") == "true", s"shard not published: $r")
-      require(m.getOrElse("vacuum.pending", "") != "true",
-        s"shard mid-vacuum (finish it first): $r")
-    }
+    val ms = shards.map(published(spark, _))
     val nf = ms.head("config.numFields")
     val fields = ms.head("config.fields")
     val nBuckets = ms.head("config.nBuckets")
@@ -1139,10 +1059,10 @@ object IndexCatalog {
     // target names (s<i>- prefix keeps shard files distinct under the
     // shared partition dir) make a resumed copy overwrite its own partial
     // output instead of duplicating rows.
-    shards.zipWithIndex.foreach { case (r, i) =>
+    shards.zip(ms).zipWithIndex.foreach { case ((r, m), i) =>
       if (!mo.contains(s"merge.copied.$i")) {
         for (table <- Seq("postings", "docstats", "tombstones")) {
-          val src = new Path(s"$r/$table")
+          val src = new Path(s"$r/${tableDir(m, table)}")
           val sf = fs(spark, r)
           if (sf.exists(src)) {
             val it = sf.listFiles(src, true)
@@ -1224,19 +1144,12 @@ object IndexCatalog {
     * DISTRIBUTED id set — a predicate-derived removal of 10^11 docs never
     * transits the driver. The first column of `ids` is the doc key.
     *
-    * A CRASHED VACUUM must be completed first: while `vacuum.pending` is
-    * set, the compacted stage tables already exclude exactly the
-    * tombstones that existed at stage time, and the resumed vacuum's
-    * final commit deletes the tombstones file wholesale — a tombstone
-    * appended in between would be dropped WITHOUT its postings ever
-    * being compacted away (a silently resurrected doc). Finishing the
-    * vacuum first restores the invariant the commit relies on:
-    * tombstones == the staged compaction's input set.
+    * A remove may land at any point of a running [[vacuum]]: the vacuum
+    * retires only the tombstone files it snapshotted before it read the
+    * index, so a later tombstone survives its commit and keeps masking
+    * its doc until the next vacuum purges it.
     */
   def removeDocuments(root: String, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    if (readManifest(spark, root).getOrElse("vacuum.pending", "") == "true")
-      vacuum(spark, root)
     ids.select(col(ids.columns.head).cast("long").as("doc_id"))
       .write.mode("append").parquet(s"$root/tombstones")
   }
@@ -1294,8 +1207,7 @@ object IndexCatalog {
     * corpus-sized). Resumable like every stage; idempotent when current.
     */
   def buildFuzzy(spark: SparkSession, root: String): Unit = {
-    var m = readManifest(spark, root)
-    require(m.getOrElse("published", "") == "true", s"no published index at $root")
+    var m = published(spark, root)
     val base = tableDir(m, "termdict")
     if (m.contains("stage.fuzzydict.rows")) {
       if (m.getOrElse("fuzzy.base", "") == base) return // current
@@ -1374,160 +1286,67 @@ object IndexCatalog {
     live.filter(col("term").isin(candSet: _*))
   }
 
-  /** Persisted vacuum (reference `vacuum`): compact postings/docstats by
-    * anti-joining tombstones, rewrite termdict, clear tombstones — a new
-    * snapshot replacing the old, stage-atomic per table.
+  /** Persisted vacuum (reference `vacuum`): a new generation of the index
+    * without the tombstoned docs. [[writeTables]] — build's own table
+    * writers — writes the live docstats, postings, termdict and fieldstats
+    * into fresh `<table>.v<n>` dirs, and ONE manifest write repoints all
+    * four tables, folds the append-delta dictionaries away and records the
+    * lineage; the sweep then deletes the superseded generation. Before
+    * that, a current-format block table is compacted incrementally
+    * ([[rewriteBlocks]] over the rg groups holding tombstoned ids); any
+    * other block table is dropped in the same commit.
+    *
+    * A crash before the commit leaves only orphan dirs (the next sweep
+    * deletes them) and the tombstones in place: re-running the vacuum
+    * redoes it. The tombstone files are retired after the commit, and only
+    * those listed before the index was read — a remove landing mid-vacuum
+    * keeps masking its doc.
     */
-  def vacuum(spark: SparkSession, root: String): Unit =
-    vacuum(spark, root, crashBeforeCommit = false)
-
-  /** Fault-injection variant for the crash-resume tests: with
-    * `crashBeforeCommit` the compaction runs every stage rewrite but
-    * "dies" before the final manifest commit — exactly the state a real
-    * mid-vacuum crash leaves (`vacuum.pending` set, stage keys recorded,
-    * `table.*` still on the pre-vacuum generation dirs).
-    */
-  private[graft] def vacuum(spark: SparkSession, root: String,
-      crashBeforeCommit: Boolean, crashMidBlockSwap: Boolean = false): Unit = {
+  def vacuum(spark: SparkSession, root: String): Unit = {
     val f = fs(spark, root)
     // a staged-but-unpublished append must land BEFORE the compaction:
     // its staged termdict/fieldstats were merged against the pre-vacuum
     // corpus, and publishing them after the rewrite would resurrect the
     // purged docs' df/stats
     resumeAppend(spark, root)
-    val mPre = readManifest(spark, root)
-    // `vacuum.pending` marks a compaction whose stages may have completed
-    // but whose final commit didn't — re-entering here finishes it (the
-    // stage keys make the rewrites skips); without the marker, a crash
-    // after the stage rewrites would strand the `table.*` pointers on the
-    // pre-vacuum generation dirs forever
-    val pending = mPre.getOrElse("vacuum.pending", "") == "true"
     val tombDir = new Path(s"$root/tombstones")
-    if (!f.exists(tombDir) && !pending) return
-    // SNAPSHOT the tombstone files this vacuum will retire (recorded in the
-    // manifest so a crash-resume retires the same set): the final commit
-    // deletes exactly these files, so a tombstone appended by another
-    // writer DURING the vacuum survives as a correct no-op-or-live mask
-    // instead of being silently dropped with its postings intact (the
-    // check-then-act race the API-level vacuum.pending guard cannot close
-    // for out-of-band writers)
-    // None ⇔ resuming a LEGACY pending vacuum (crashed under an engine
-    // version that never wrote the snapshot key) — the retire step then
-    // keeps the old whole-dir delete. Writing "" instead would make that
-    // fallback unreachable: zero files retired, dir kept, tombstones mask
-    // already-purged docs forever.
-    val tombSnapshot: Option[String] =
-      if (!pending)
-        Some(if (f.exists(tombDir))
-          f.listStatus(tombDir).filter(_.isFile).map(_.getPath.getName).mkString(";")
-        else "")
-      else mPre.get("vacuum.tombfiles")
+    if (!f.exists(tombDir)) return
+    val retired = f.listStatus(tombDir).filter(_.isFile).map(_.getPath)
     val idx = read(spark, root)
-    // retire EXACTLY the snapshot's tombstone files: ones appended during
-    // the vacuum stay live (their docs either got compacted away — the
-    // mask is then a no-op — or didn't, and the mask still hides them;
-    // correct either way). A legacy pending manifest without the snapshot
-    // key keeps the old whole-dir delete.
-    def retireTombstones(snapshot: Option[String]): Unit = snapshot match {
-      case Some(snap) =>
-        snap.split(";").filter(_.nonEmpty)
-          .foreach(n => f.delete(new Path(s"$root/tombstones/$n"), false))
-        val dataLeft = f.exists(tombDir) && f.listStatus(tombDir)
-          .exists(st => st.isFile && isDataFile(st.getPath.getName))
-        if (!dataLeft) f.delete(tombDir, true)
-      case None => f.delete(tombDir, true) // legacy pending manifest
+    if (idx.hasTombstones) {
+      if (readManifest(spark, root).contains("blocks.swap")) swapBlocks(spark, root)
+      var m = readManifest(spark, root)
+      // a current-format table with no unfolded append deltas is compacted
+      // in place: only the rg groups holding tombstoned ids are re-encoded
+      val incremental = m.contains("stage.blocks.rows") &&
+        m.getOrElse("config.blockFormat", "1") == BlockFormat &&
+        m.getOrElse("blocks.pending", "").isEmpty
+      if (incremental) {
+        val bs = m("config.blockSize").toLong
+        val rpg = m("config.rangesPerGroup").toLong
+        // the rg of each tombstoned id: on the driver when the ids are held
+        // there (the same exact long division as rgCol)
+        val rgs = idx.tombstoneIds match {
+          case Some(ids) => ids.map(id => Math.toIntExact(id / bs / rpg)).distinct.toSeq
+          case None => idx.tombstones.select(rgCol(longDiv(col("doc_id"), bs), rpg)
+            .as("rg")).distinct().collect().map(_.getInt(0)).toSeq
+        }
+        if (rgs.nonEmpty) {
+          rewriteBlocks(spark, root, m, col("rg").isin(rgs: _*), idx.withoutTombstoned, Nil)
+          m = readManifest(spark, root)
+        }
+      }
+      val gen = tableDir(m, "postings").stripPrefix("postings.v").toIntOption.fold(1)(_ + 1)
+      val stale = m.keys.filter(k => k.startsWith("lineage.") || k.startsWith("table.") ||
+        Tables.exists(t => k.startsWith(s"stage.$t.")))
+      val next = (m -- stale - "append.deltas" -- (if (incremental) Nil else BlockStateKeys)) ++
+        Tables.map(t => s"table.$t" -> s"$t.v$gen")
+      commit(spark, root, writeTables(spark, root, next, idx.numFields,
+        m("config.nBuckets").toInt, idx.liveDocstats, idx.livePostings, commit = false))
     }
-    if (!pending && !idx.hasTombstones) {
-      // tombstone files that hold no id: nothing to compact
-      retireTombstones(tombSnapshot); return
-    }
-    var m = mPre
-    // Block-table strategy: a CURRENT-format table with no unfolded append
-    // deltas is compacted INCREMENTALLY after the stage rewrites — only
-    // the rg partitions containing tombstoned ids are re-encoded
-    // (compactBlocks) and its stage keys survive the vacuum. Anything else
-    // (no blocks, stale format, unfolded deltas, crashed append-fold) is
-    // dropped here WITH all its state keys stripped in the SAME manifest
-    // write — deleting the dir while leaving the keys would wedge
-    // readBlocks/buildBlocks on a phantom stage.
-    val blocksIncremental = m.contains("stage.blocks.rows") &&
-      m.getOrElse("config.blockFormat", "1") == BlockFormat &&
-      m.getOrElse("blocks.pending", "").isEmpty &&
-      (!m.contains("blocks.swap") || m("blocks.swap") == "vacuum")
-    // clear stage/lineage keys so the rewrites run (on RESUME keep them —
-    // completed stages skip), but KEEP the table.* generation pointers:
-    // readers stay on the pre-vacuum termdict/fieldstats (with live
-    // tombstone recount, still correct) until the final commit below
-    // atomically repoints them at the rewritten tables
-    if (!pending)
-      m = m -- m.keys.filter(k =>
-        (k.startsWith("stage.") && !(blocksIncremental && k.startsWith("stage.blocks"))) ||
-          k.startsWith("lineage."))
-    if (!blocksIncremental) m = m -- BlockStateKeys
-    m = m + ("vacuum.pending" -> "true") ++
-      tombSnapshot.map("vacuum.tombfiles" -> _)
-    writeManifest(spark, root, m)
-    if (!blocksIncremental) {
-      // the block table (if built) still holds purged postings and cannot
-      // be incrementally maintained from this state: drop it (its state
-      // keys were stripped in the commit above)
-      f.delete(new Path(s"$root/blocks"), true)
-      f.delete(new Path(s"$root/$BlockFoldTmp"), true)
-    }
-    m = stage(spark, root, "docstats", m)(idx.liveDocstats)
-    m = stage(spark, root, "postings", m, partitionBy = Seq("bucket")) {
-      val nb = m("config.nBuckets").toInt
-      idx.livePostings.repartition(nb, col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-    }
-    m = stage(spark, root, "termdict", m) {
-      readTable(spark, root, m, "postings")
-        .groupBy(col("term"), col("bucket")).agg(sum(col("occ")).as("df"))
-        .repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"))
-    }
-    m = stage(spark, root, "fieldstats", m) {
-      val nf = idx.numFields
-      val aggs = count(lit(1)).as("n") +:
-        (0 until nf).map(i => coalesce(sum(element_at(col("fl"), i + 1)), lit(0L)).as(s"s$i"))
-      readTable(spark, root, m, "docstats").agg(aggs.head, aggs.tail: _*)
-    }
-    if (crashBeforeCommit) return // fault injection: die before the commit
-    // incremental block compaction (decided above): re-encode only the rg
-    // partitions with tombstoned ids, BEFORE the commit deletes the
-    // tombstone set it anti-joins. Idempotent under crash-resume.
-    if (blocksIncremental) {
-      // false ONLY under crashMidBlockSwap fault injection: abort the
-      // whole vacuum as a simulated crash one rename into the swap loop
-      if (!compactBlocks(spark, root, idx, crashMidBlockSwap)) return
-      m = readManifest(spark, root) // picks up the updated stage.blocks.rows
-    }
-    // vacuum rewrote the whole posting store: refresh the global lineage
-    // (append deltas were folded in by the rewrite, so their lines go)
-    val perBucket = bucketLineage(readTable(spark, root, m, "postings"))
-    // FINAL COMMIT (one manifest write): repoint the small tables at the
-    // rewritten plain dirs (drop the table.* generation keys and the
-    // append-delta registry — the rewritten dictionary subsumes them),
-    // clear the pending marker, publish. Tombstones are deleted only AFTER
-    // the commit: against the compacted postings the anti-join and live-df
-    // recount are no-ops, so queries are correct in both orders, while
-    // deleting first would leave a crash window with stale gen-dir df and
-    // no tombstones
-    writeManifest(spark, root,
-      (m -- m.keys.filter(k =>
-        k.startsWith("lineage.append.") || k.startsWith("table."))) -
-        "vacuum.pending" - "vacuum.tombfiles" - "append.deltas" +
-        ("published" -> "true") + ("lineage.postings" -> perBucket))
-    retireTombstones(m.get("vacuum.tombfiles"))
-    // GC the superseded generation/delta dirs (post-commit; also re-swept
-    // by the next append's publish if this crashes)
-    f.listStatus(new Path(root)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory &&
-          (n.startsWith("termdict.g") || n.startsWith("fieldstats.g") ||
-            n.startsWith("termdict.d") || n.startsWith("fieldstats.d")))
-        f.delete(st.getPath, true)
-    }
+    retired.foreach(f.delete(_, false))
+    if (!f.listStatus(tombDir).exists(st => st.isFile && isDataFile(st.getPath.getName)))
+      f.delete(tombDir, true)
     ()
   }
 }

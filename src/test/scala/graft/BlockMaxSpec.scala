@@ -133,7 +133,7 @@ class BlockMaxSpec extends TestBase {
     IndexCatalog.removeDocuments(spark, root, Seq(0L, 1L, 2L))
     IndexCatalog.vacuum(spark, root)
     // the block table SURVIVES the vacuum (round-4 engine dropped it and
-    // re-encoded from the full posting store): compactBlocks re-encoded
+    // re-encoded from the full posting store): the block rewrite re-encoded
     // only the rg partitions holding tombstoned ids, and readBlocks serves
     // data consistent with the compacted postings with no rebuild step
     val idx = IndexCatalog.read(spark, root)

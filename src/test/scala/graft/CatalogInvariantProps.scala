@@ -77,8 +77,8 @@ object CatalogInvariantProps extends Properties("CatalogInvariants") {
 
   /** Every invariant of the scaladoc, on the index at `root`. */
   private def invariants(root: String): Boolean = {
-    val postings = spark.read.parquet(s"$root/postings")
-    val docstats = spark.read.parquet(s"$root/docstats")
+    val postings = spark.read.parquet(TestCatalog.tablePath(root, "postings"))
+    val docstats = spark.read.parquet(TestCatalog.tablePath(root, "docstats"))
     val tombDir = new java.io.File(s"$root/tombstones")
     val tombs =
       if (tombDir.exists()) spark.read.parquet(tombDir.toString).select("doc_id")
@@ -126,7 +126,6 @@ object CatalogInvariantProps extends Properties("CatalogInvariants") {
           case Vacuum =>
             IndexCatalog.vacuum(spark, root)
           case Merge(n) =>
-            // mergeShards refuses a shard mid-vacuum; neither is here
             val other = tmp("graft_inv_shard_")
             IndexCatalog.build(docs(n), "id", Fields, other, nBuckets = 4)
             val out = tmp("graft_inv_merged_")

@@ -146,6 +146,19 @@ class FuzzySpec extends TestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assertScores(afterRebuild, fuzzyQuery(idx3, "quarts", BM25()))
     assert(afterRebuild.map(_._1) == Seq(8L))
+
+    // a vacuum writes a new dictionary generation: refuse until rebuilt
+    IndexCatalog.removeDocuments(spark, root, Seq(1L))
+    IndexCatalog.vacuum(spark, root)
+    val idx4 = IndexCatalog.read(spark, root)
+    val ex2 = intercept[IllegalArgumentException] {
+      QueryEngine.queryFuzzyPersisted(idx4, root, "sart kay", BM25()).collect()
+    }
+    assert(ex2.getMessage.contains("re-run"))
+    IndexCatalog.buildFuzzy(spark, root)
+    assertScores(QueryEngine.queryFuzzyPersisted(idx4, root, "sart kay", BM25())
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq,
+      fuzzyQuery(idx4, "sart kay", BM25()))
   }
 
   test("persisted probe is partition-pruned to the query variants' buckets") {

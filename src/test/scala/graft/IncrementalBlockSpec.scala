@@ -39,6 +39,21 @@ class IncrementalBlockSpec extends TestBase {
       }.toMap
   }
 
+  /** The local dir of a `stepfs` root. */
+  private def local(root: String): String = new java.net.URI(root).getPath
+
+  /** A vacuum killed ONE partition rename into its block swap: after its
+    * swap marker committed, with both swapped and unswapped groups left.
+    */
+  private def vacuumCrashedMidSwap(root: String): Unit = {
+    var swapped = 0
+    val crashed = StepFs.crash { s =>
+      if (s.op == "rename" && s.path.contains("_tmp_blocks_fold/")) swapped += 1
+      swapped == 2
+    }(IndexCatalog.vacuum(spark, root))
+    assert(crashed, "the vacuum was not crashed")
+  }
+
   private def decodeAll(root: String): org.apache.spark.sql.DataFrame = {
     val (blocks, bs, _) = IndexCatalog.readBlocks(spark, root)
     PostingBlocks.toPostings(blocks.toDF(), 1, bs)
@@ -139,19 +154,18 @@ class IncrementalBlockSpec extends TestBase {
     // already-swapped live dir (its tmp copy gone with the rename) —
     // permanent, silent block loss. The drop list now covers only
     // EMPTIED pairs and the swap runs before the drops.
-    val root = Files.createTempDirectory("graft_iblk5_").toString
+    val root = StepFs.tempRoot(spark, "graft_iblk5_")
     IndexCatalog.build(corpus(0L until 200L), "id", Seq("body"), root, nBuckets = 4)
     IndexCatalog.buildBlocks(spark, root, blockSize = 16, rangesPerGroup = 4)
     // tombstone ids spanning MANY (bucket, rg) pairs so the mid-swap crash
     // leaves both swapped and unswapped rewrites behind
     IndexCatalog.removeDocuments(spark, root, (10L until 20L) ++ (70L until 80L))
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = false,
-      crashMidBlockSwap = true)
-    // crashed: marker still set, vacuum still pending
-    val mf = java.nio.file.Files.readString(Paths.get(s"$root/manifest.json"))
-    assert(mf.contains("\"blocks.swap\"") && mf.contains("\"vacuum.pending\""))
+    vacuumCrashedMidSwap(root)
+    // crashed: swap marker still set
+    val mf = java.nio.file.Files.readString(Paths.get(s"${local(root)}/manifest.json"))
+    assert(mf.contains("\"blocks.swap\""))
 
-    IndexCatalog.vacuum(spark, root) // resume completes swap + drops + commit
+    IndexCatalog.vacuum(spark, root) // re-run finishes the swap, then vacuums
     val idx = IndexCatalog.read(spark, root)
     val back = decodeAll(root)
     assert(back.filter(col("doc_id").between(10L, 19L) ||
@@ -161,7 +175,7 @@ class IncrementalBlockSpec extends TestBase {
     assert(back.exceptAll(
       idx.postings.select("term", "doc_id", "tf", "fl", "occ")).count() == 0)
     // and the manifest row count is the real one
-    val m2 = java.nio.file.Files.readString(Paths.get(s"$root/manifest.json"))
+    val m2 = java.nio.file.Files.readString(Paths.get(s"${local(root)}/manifest.json"))
     val recorded = "\"stage\\.blocks\\.rows\": \"(\\d+)\"".r
       .findFirstMatchIn(m2).get.group(1).toLong
     val (blocks, _, _) = IndexCatalog.readBlocks(spark, root)
@@ -212,66 +226,62 @@ class IncrementalBlockSpec extends TestBase {
     // used to finish the swap WITHOUT applying blocks.swap.drop — the
     // all-emptied partitions survived with a stale row count, masked only
     // while the tombstones happened to still exist.
-    val root = Files.createTempDirectory("graft_iblk6_").toString
+    val root = StepFs.tempRoot(spark, "graft_iblk6_")
     IndexCatalog.build(corpus(0L until 200L), "id", Seq("body"), root, nBuckets = 4)
     IndexCatalog.buildBlocks(spark, root, blockSize = 16, rangesPerGroup = 4)
     // rg 0 = doc ids 0..63 tombstoned WHOLESALE (every rg=0 partition
     // empties ⇒ non-empty drop list) plus a partial rg 2 rewrite
     IndexCatalog.removeDocuments(spark, root, (0L until 64L) ++ (130L until 140L))
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = false,
-      crashMidBlockSwap = true)
-    val mf = java.nio.file.Files.readString(Paths.get(s"$root/manifest.json"))
-    assert(mf.contains("\"blocks.swap\": \"vacuum\"") &&
-      mf.contains("\"blocks.swap.drop\""))
+    vacuumCrashedMidSwap(root)
+    // a vacuum's swap folds no append generation
+    val mf = java.nio.file.Files.readString(Paths.get(s"${local(root)}/manifest.json"))
+    assert(mf.contains("\"blocks.swap\": \"\"") &&
+      "\"blocks\\.swap\\.drop\": \"bucket=".r.findFirstIn(mf).nonEmpty)
 
     IndexCatalog.buildBlocks(spark, root) // NOT vacuum — the serving path
     // swap finished: readable, retired partitions gone, row count honest
-    assert(!blockFileHashes(root).keys.exists(_.contains("rg=0")),
+    assert(!blockFileHashes(local(root)).keys.exists(_.contains("rg=0")),
       "all-emptied rg=0 partitions must be dropped by the finished swap")
     val idx = IndexCatalog.read(spark, root)
     val back = decodeAll(root)
     assert(back.filter(col("doc_id") < 64L ||
       col("doc_id").between(130L, 139L)).count() == 0)
-    assert(back.count() == idx.postings.count())
-    val m2 = java.nio.file.Files.readString(Paths.get(s"$root/manifest.json"))
+    // the crashed vacuum never committed its tables: the posting store
+    // still holds the tombstoned docs, which the blocks no longer encode
+    assert(back.count() == idx.livePostings.count())
+    val m2 = java.nio.file.Files.readString(Paths.get(s"${local(root)}/manifest.json"))
     assert(!m2.contains("blocks.swap"))
     val recorded = "\"stage\\.blocks\\.rows\": \"(\\d+)\"".r
       .findFirstMatchIn(m2).get.group(1).toLong
     val (blocks, _, _) = IndexCatalog.readBlocks(spark, root)
     assert(blocks.count() == recorded)
-    // the still-pending vacuum completes cleanly afterwards
+    // the re-run vacuum completes cleanly afterwards
     IndexCatalog.vacuum(spark, root)
-    assert(!java.nio.file.Files.readString(Paths.get(s"$root/manifest.json"))
-      .contains("vacuum.pending"))
+    assert(!IndexCatalog.read(spark, root).hasTombstones)
     assert(decodeAll(root).exceptAll(IndexCatalog.read(spark, root).postings
       .select("term", "doc_id", "tf", "fl", "occ")).count() == 0)
   }
 
-  test("a LEGACY pending vacuum (no tombfiles snapshot) still retires tombstones") {
-    // round-5 review finding: resuming a pre-snapshot-era pending vacuum
-    // wrote vacuum.tombfiles="" — the whole-dir legacy delete became
-    // unreachable and the tombstone mask (over already-purged docs)
-    // survived every later vacuum.
+  test("a root left mid-vacuum by an older engine is refused with a rebuild message") {
+    // older engine versions resumed a crashed vacuum from a
+    // `vacuum.pending` manifest; the resume is gone (a vacuum now commits
+    // once), and such a root may hold compacted tables under a stale
+    // dictionary — refused, as readBlocks refuses a stale block format
     val root = Files.createTempDirectory("graft_iblk7_").toString
     IndexCatalog.build(corpus(0L until 100L), "id", Seq("body"), root, nBuckets = 4)
     IndexCatalog.removeDocuments(spark, root, 10L until 20L)
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = true)
-    // simulate the crash having happened under the pre-snapshot engine:
-    // strip the vacuum.tombfiles line from the manifest
     val mp = Paths.get(s"$root/manifest.json")
-    val legacy = java.nio.file.Files.readString(mp).linesIterator
-      .filterNot(_.contains("vacuum.tombfiles")).mkString("\n")
-    java.nio.file.Files.writeString(mp, legacy)
+    java.nio.file.Files.writeString(mp, java.nio.file.Files.readString(mp)
+      .replaceFirst("\\{", "{\n  \"vacuum.pending\": \"true\","))
     // the out-of-band rewrite invalidates Hadoop LocalFS's sidecar checksum
     java.nio.file.Files.deleteIfExists(Paths.get(s"$root/.manifest.json.crc"))
-
-    IndexCatalog.vacuum(spark, root) // resume under the current engine
-    assert(!java.nio.file.Files.exists(Paths.get(s"$root/tombstones")),
-      "legacy resume must fall back to the whole-dir tombstone delete")
-    val idx = IndexCatalog.read(spark, root)
-    assert(!idx.hasTombstones)
-    assert(idx.postings.filter(col("doc_id").between(10L, 19L)).count() == 0)
-    assert(idx.docstats.count() == 90)
+    for (op <- Seq[() => Any](() => IndexCatalog.read(spark, root),
+        () => IndexCatalog.vacuum(spark, root),
+        () => IndexCatalog.addDocuments(corpus(Seq(500L)), "id", root),
+        () => IndexCatalog.buildBlocks(spark, root))) {
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("mid-vacuum") && e.getMessage.contains("rebuild"))
+    }
   }
 
   test("fold crash protocol: pending marker survives and a re-run completes") {

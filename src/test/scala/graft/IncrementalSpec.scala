@@ -168,25 +168,25 @@ class IncrementalSpec extends TestBase {
     }
   }
 
-  test("append after a crashed vacuum completes the vacuum first") {
-    // the round-4 ADVICE interleaving: a vacuum that died AFTER its stage
-    // rewrites but BEFORE the final commit (vacuum.pending set, stage keys
-    // recorded, table.* still on pre-vacuum generation dirs). An append
-    // publishing in that state used to (a) GC the crashed vacuum's plain
-    // termdict/fieldstats rewrites as "old generations" and (b) let the
-    // resumed vacuum commit stale stage tables that never saw the
-    // append's docs — index left with no dictionary at all.
-    val root = Files.createTempDirectory("graft_incr6_").toString
+  /** A vacuum killed before its first catalog step — its commit. */
+  private def crashedVacuum(root: String): Unit =
+    assert(StepFs.crashAt(1)(IndexCatalog.vacuum(spark, root)), "the vacuum was not crashed")
+
+  test("append after a crashed vacuum, then a re-run vacuum, == build(net corpus)") {
+    // the round-4 ADVICE interleaving: a vacuum that died after its table
+    // rewrites but before its commit, then an append. The crashed vacuum
+    // left only orphan dirs — the append publishes over the pre-vacuum
+    // index, and the re-run vacuum compacts both.
+    val root = StepFs.tempRoot(spark, "graft_incr6_")
     IndexCatalog.build(batch(batchA), "id", Seq("title", "description"), root, nBuckets = 8)
     IndexCatalog.addDocuments(batch(batchB), "id", root) // table.* → *.g1
     IndexCatalog.removeDocuments(spark, root, Seq(0L, 2L))
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = true)
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/manifest.json"))
-      .contains("\"vacuum.pending\": \"true\""))
+    crashedVacuum(root)
+    assert(IndexCatalog.read(spark, root).hasTombstones)
 
     val batchC = Seq((4L, "abc zzz", "dfg abcf"))
     IndexCatalog.addDocuments(batch(batchC), "id", root)
+    IndexCatalog.vacuum(spark, root)
 
     val idx = IndexCatalog.read(spark, root)
     val full = IndexBuilder.build(
@@ -204,28 +204,23 @@ class IncrementalSpec extends TestBase {
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(a == b, s"query '$q': lifecycle=$a vs full=$b")
     }
-    assert(!java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/manifest.json"))
-      .contains("vacuum.pending"))
   }
 
-  test("remove after a crashed vacuum completes the vacuum first") {
-    // without the guard, the tombstone appended AFTER the crash is
-    // deleted by the resumed vacuum's final commit while its postings —
-    // never part of the staged compaction — survive: a silently
-    // resurrected document
-    val root = Files.createTempDirectory("graft_incr7_").toString
+  test("remove after a crashed vacuum, then a re-run vacuum, == build(net corpus)") {
+    // the tombstone appended after the crash must end compacted away with
+    // the first one, never dropped while its postings survive
+    val root = StepFs.tempRoot(spark, "graft_incr7_")
     IndexCatalog.build(batch(batchA ++ batchB), "id",
       Seq("title", "description"), root, nBuckets = 8)
     IndexCatalog.removeDocuments(spark, root, Seq(0L))
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = true)
-    IndexCatalog.removeDocuments(spark, root, Seq(2L)) // must finish it first
+    crashedVacuum(root)
+    IndexCatalog.removeDocuments(spark, root, Seq(2L))
     IndexCatalog.vacuum(spark, root)
     val idx = IndexCatalog.read(spark, root)
     val full = IndexBuilder.build(
       batch((batchA ++ batchB).filterNot(r => r._1 == 0L || r._1 == 2L)),
       "id", Seq("title", "description"))
-    assert(idx.docstats.count() == 2)
+    assert(idx.docstats.count() == 2 && !idx.hasTombstones)
     assert(idx.termdict.select("term", "df").exceptAll(full.termdict).count() == 0 &&
       full.termdict.exceptAll(idx.termdict.select("term", "df")).count() == 0)
     val a = QueryEngine.query(idx, "abc", BM25()).collect()
@@ -236,22 +231,20 @@ class IncrementalSpec extends TestBase {
   }
 
   test("out-of-band tombstone appended mid-vacuum survives the commit") {
-    // An EXTERNAL writer (bypassing the removeDocuments guard) appends a
-    // tombstone while a vacuum sits crashed between its stage rewrites and
-    // its final commit. The commit must retire only the tombstone files
-    // the vacuum snapshotted at stage time — deleting the whole dir (the
-    // old behavior) would drop the late tombstone while its postings,
-    // never part of the staged compaction, survive: a silently
-    // resurrected document.
+    // An EXTERNAL writer (raw parquet append, no API call) adds a
+    // tombstone while a vacuum runs, after it listed the tombstone files it
+    // retires and before its commit. The vacuum must retire only the files
+    // it listed — deleting the whole dir would drop the late tombstone
+    // while its postings, never part of the compaction, survive: a
+    // silently resurrected document.
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_incr8_").toString
+    val root = StepFs.tempRoot(spark, "graft_incr8_")
     IndexCatalog.build(batch(batchA ++ batchB), "id",
       Seq("title", "description"), root, nBuckets = 8)
     IndexCatalog.removeDocuments(spark, root, Seq(0L))
-    IndexCatalog.vacuum(spark, root, crashBeforeCommit = true)
-    // out-of-band writer: raw parquet append, no API guard
-    Seq(2L).toDF("doc_id").write.mode("append").parquet(s"$root/tombstones")
-    IndexCatalog.vacuum(spark, root) // resume + commit
+    StepFs.trace(s => if (s.n == 1)
+      Seq(2L).toDF("doc_id").write.mode("append").parquet(s"$root/tombstones")
+    )(IndexCatalog.vacuum(spark, root))
     val idx = IndexCatalog.read(spark, root)
     // doc 0 is compacted away; doc 2's late tombstone must still mask it
     assert(idx.hasTombstones,

@@ -34,6 +34,13 @@ class JobBudgetSpec extends TestBase {
     r
   }
 
+  /** Jobs of a `buildBlocks` fold and of a `vacuum` on this fixture. The
+    * per-stage vacuum protocol and separate fold/compaction rewrites that
+    * preceded the single-commit vacuum ran 9 and 20.
+    */
+  private val FoldBudget = 6
+  private val VacuumBudget = 15
+
   private def jobs[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = JobCounter.on(sc).newGroup()
@@ -73,6 +80,25 @@ class JobBudgetSpec extends TestBase {
       Seq(1L -> "import", 2L -> "Modu", 3L -> "fn ident2 val"), BM25(), k = 10).collect())
     assert(batchJobs <= 8, s"batchQuery ran $batchJobs jobs")
     info(s"read $readJobs, readBlocks $blockJobs, zero-to-one $ztoJobs, batchQuery $batchJobs jobs")
+  }
+
+  test("a buildBlocks fold and a vacuum stay within their job budgets") {
+    val copy = Files.createTempDirectory("graft_budget_mut_").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(root), new java.io.File(copy))
+    IndexCatalog.addDocuments(SourceCodeGen.generate(spark, 440).filter(col("doc_id") >= 420),
+      "doc_id", copy)
+    val (_, foldJobs) = jobs(IndexCatalog.buildBlocks(spark, copy))
+    val (_, vacuumJobs) = jobs(IndexCatalog.vacuum(spark, copy))
+    info(s"fold $foldJobs, vacuum $vacuumJobs jobs")
+    assert(foldJobs <= FoldBudget, s"buildBlocks fold ran $foldJobs jobs")
+    assert(vacuumJobs <= VacuumBudget, s"vacuum ran $vacuumJobs jobs")
+    val idx = IndexCatalog.read(spark, copy)
+    assert(!idx.hasTombstones)
+    val (blocks, bs, rpg) = IndexCatalog.readBlocks(spark, copy)
+    for (q <- Seq("import", "fn ident2 val"))
+      assert(ranked(BlockMaxTopK.query(idx, blocks, q, BM25(), k = 10,
+        blockSize = bs, rangesPerGroup = rpg).collect()) ==
+        ranked(QueryEngine.query(idx, q, BM25(), limit = 10).collect()))
   }
 
   test("a root whose manifest has no schema keys still reads, by inference") {

@@ -12,8 +12,9 @@ import graft.score.BM25
   * query results match a one-shot in-memory build over the net corpus
   * (adds minus removes), and — after a closing vacuum — whose termdict and
   * stats match exactly. Exercises the generation-dir publish, the
-  * vacuum.pending commit, and resume ordering under composition (the
-  * pairwise cases live in IncrementalSpec; this walks them together).
+  * vacuum's single commit under crashes at any of its steps, and resume
+  * ordering under composition (the pairwise cases live in IncrementalSpec;
+  * this walks them together).
   */
 object LifecycleProps extends Properties("Lifecycle") {
 
@@ -31,15 +32,15 @@ object LifecycleProps extends Properties("Lifecycle") {
   sealed trait Op
   case class Append(crash: Boolean) extends Op
   case class Remove(pick: Int) extends Op
-  /** crash = die AFTER the stage rewrites, BEFORE the final commit — the
-    * vacuum.pending state every later writer must complete first.
+  /** crash > 0: die before the vacuum's `crash`-th catalog step (a
+    * rename or delete, [[StepFs]]); a vacuum with fewer steps completes.
     */
-  case class Vacuum(crash: Boolean) extends Op
+  case class Vacuum(crash: Int) extends Op
 
   private val opGen: Gen[Op] = Gen.frequency(
     4 -> Gen.oneOf(true, false).map(Append(_)),
     3 -> Gen.choose(0, Int.MaxValue).map(Remove(_)),
-    2 -> Gen.oneOf(true, false).map(Vacuum(_)))
+    2 -> Gen.oneOf(Gen.const(0), Gen.choose(1, 12)).map(Vacuum(_)))
 
   private val caseGen = for {
     n <- Gen.choose(8, 16)
@@ -53,8 +54,7 @@ object LifecycleProps extends Properties("Lifecycle") {
       import spark.implicits._
       def df(r: Seq[(Long, String)]) = r.toDF("id", "title")
       val rows = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_life_").toString
+      val root = StepFs.tempRoot(spark, "graft_life_")
 
       // initial build over a prefix; remaining docs are split across the
       // Append ops in order
@@ -90,7 +90,7 @@ object LifecycleProps extends Properties("Lifecycle") {
             live = live - id
           }
         case Vacuum(crash) =>
-          IndexCatalog.vacuum(spark, root, crashBeforeCommit = crash)
+          StepFs.crashAt(crash)(IndexCatalog.vacuum(spark, root))
       }
       IndexCatalog.resumeAppend(spark, root) // land any trailing crash
       val got = IndexCatalog.read(spark, root)
@@ -117,8 +117,8 @@ object LifecycleProps extends Properties("Lifecycle") {
   /** The same walk with the BLOCK TABLE live: a fold (`buildBlocks`) is
     * interleaved at random points, so appends fold O(delta) onto prior
     * folds, vacuums compact (or drop+strip) whatever fold state they find,
-    * and crashed vacuums leave pending state a later fold must not wedge
-    * on. The end state must satisfy: WAND over the folded block table ==
+    * and crashed vacuums leave a block swap a later fold must finish. The
+    * end state must satisfy: WAND over the folded block table ==
     * exhaustive over a one-shot in-memory build of the net corpus — for
     * every interleaving, under tombstones, at a block geometry small
     * enough (blockSize 8 × rangesPerGroup 2) that folds really do split
@@ -129,14 +129,12 @@ object LifecycleProps extends Properties("Lifecycle") {
       import spark.implicits._
       def df(r: Seq[(Long, String)]) = r.toDF("id", "title")
       val rows = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_lifeblk_").toString
+      val root = StepFs.tempRoot(spark, "graft_lifeblk_")
 
       val nAppends = math.max(1, ops.count(_.isInstanceOf[Append]))
       val cut = math.max(1, rows.size / (nAppends + 1))
       var pending = rows.drop(cut)
       var live = rows.take(cut).toMap
-      var vacuumPending = false
       IndexCatalog.build(df(rows.take(cut)), "id", Seq("title"), root, nBuckets = 4)
       IndexCatalog.buildBlocks(spark, root, blockSize = 8, rangesPerGroup = 2)
 
@@ -149,7 +147,7 @@ object LifecycleProps extends Properties("Lifecycle") {
               IndexCatalog.resumeAppend(spark, root)
               IndexCatalog.stageAppend(df(batch), "id", root)
               ()
-            } else { IndexCatalog.addDocuments(df(batch), "id", root); vacuumPending = false }
+            } else IndexCatalog.addDocuments(df(batch), "id", root)
             live = live ++ batch
           }
         case Remove(pick) =>
@@ -157,20 +155,18 @@ object LifecycleProps extends Properties("Lifecycle") {
             val ids = live.keys.toSeq.sorted
             val id = ids(pick % ids.size)
             IndexCatalog.removeDocuments(spark, root, Seq(id))
-            vacuumPending = false // remove completes a pending vacuum first
             live = live - id
           }
         case Vacuum(crash) =>
-          IndexCatalog.vacuum(spark, root, crashBeforeCommit = crash)
-          vacuumPending = crash
           // a single writer FOLDS here too — this is the append-then-WAND
           // serving loop the incremental path exists for (the geometry
           // params only apply if the vacuum dropped the table and this is
           // a full rebuild; an incremental fold keeps the recorded config)
-          if (!crash) IndexCatalog.buildBlocks(spark, root, blockSize = 8, rangesPerGroup = 2)
+          if (!StepFs.crashAt(crash)(IndexCatalog.vacuum(spark, root)))
+            IndexCatalog.buildBlocks(spark, root, blockSize = 8, rangesPerGroup = 2)
       }
-      // single-writer close-out: land trailing crash state, then fold
-      if (vacuumPending) IndexCatalog.vacuum(spark, root)
+      // single-writer close-out: land a trailing crashed append, then fold
+      // (which also finishes a block swap a crashed vacuum left)
       IndexCatalog.resumeAppend(spark, root)
       IndexCatalog.buildBlocks(spark, root, blockSize = 8, rangesPerGroup = 2)
 

@@ -67,7 +67,7 @@ class PersistedIndexSpec extends TestBase {
       ()
     }
     rm(s"$root/termdict"); rm(s"$root/fieldstats")
-    val postingFiles = new java.io.File(s"$root/postings").listFiles().map(f =>
+    val postingFiles = new java.io.File(TestCatalog.tablePath(root, "postings")).listFiles().map(f =>
       f.getName -> f.lastModified).toMap
 
     // resume feeds DIFFERENT (poisoned) docs: completed stages must come
@@ -76,7 +76,7 @@ class PersistedIndexSpec extends TestBase {
     val poisoned = Seq((0L, "poison", "poison"), (1L, "poison", "poison"))
       .toDF("id", "title", "description")
     val idx = IndexCatalog.build(poisoned, "id", Seq("title", "description"), root, nBuckets = 8)
-    val after = new java.io.File(s"$root/postings").listFiles().map(f =>
+    val after = new java.io.File(TestCatalog.tablePath(root, "postings")).listFiles().map(f =>
       f.getName -> f.lastModified).toMap
     assert(after == postingFiles, "postings stage was recomputed on resume")
     assert(idx.termdict.filter(org.apache.spark.sql.functions.col("term") === "poison").count() == 0)

@@ -88,7 +88,7 @@ class ShardMergeSpec extends TestBase {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (!d.exists) Nil
         else d.listFiles.toSeq.flatMap(f => if (f.isDirectory) walk(f) else Seq(f))
-      walk(new java.io.File(s"$out/postings"))
+      walk(new java.io.File(TestCatalog.tablePath(out, "postings")))
         .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
     }
     val filesBefore = postingFiles()
@@ -179,7 +179,7 @@ class ShardMergeSpec extends TestBase {
     val lineage = mo.split("\"lineage.postings\"\\s*:\\s*\"")(1).split("\"")(0)
       .split(";").filter(_.nonEmpty)
       .map { kv => val Array(b, c) = kv.split("="); (b.toInt, c.toLong) }.toMap
-    val actual = spark.read.parquet(s"$out/postings")
+    val actual = spark.read.parquet(TestCatalog.tablePath(out, "postings"))
       .groupBy("bucket").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(lineage == actual,

@@ -21,6 +21,13 @@ object TestSpark {
   }
 }
 
+/** Where a persisted index keeps its tables. */
+object TestCatalog {
+  /** The current dir of `table` under `root`: the dir its manifest names. */
+  def tablePath(root: String, table: String): String =
+    s"$root/${graft.index.IndexCatalog.manifest(TestSpark.spark, root).getOrElse(s"table.$table", table)}"
+}
+
 /** Shared harness mirroring the reference test utils
   * (/root/reference/src/lib.rs:16-84): golden corpora in, (doc_id, score)
   * vectors out, 1e-8 approx equality, canonical tie order
