@@ -262,7 +262,7 @@ class IncrementalBlockSpec extends TestBase {
       .select("term", "doc_id", "tf", "fl", "occ")).count() == 0)
   }
 
-  test("a root left mid-vacuum by an older engine is refused with a rebuild message") {
+  test("a root left mid-vacuum by an older engine is refused") {
     // older engine versions resumed a crashed vacuum from a
     // `vacuum.pending` manifest; the resume is gone (a vacuum now commits
     // once), and such a root may hold compacted tables under a stale
